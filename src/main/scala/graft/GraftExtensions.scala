@@ -74,8 +74,8 @@ object GraftExtensions {
     // graft_rand_proj(vec): the seeded 64→16 ±1 JL projection n9 uses
     fn1("graft_rand_proj")(Similarity.randomProject(_, 64, 16)),
     fn2("graft_cosine")(Similarity.cosine),
-    // graft_shingles(text, n): n must be a literal — it fixes the
-    // shape of the generated expression tree at plan time
+    // graft_shingles(text, n): n must be a literal — it is a
+    // plan-time constant of the native shingle kernel
     (
       new FunctionIdentifier("graft_shingles"), info("graft_shingles"),
       (exprs: Seq[Expression]) => {

@@ -1981,9 +1981,8 @@ object PipelineQueries {
     // per-doc spans are pre-distinct'd so a span repeated inside one
     // doc counts once.
     "d10_dup_spans" -> ((s, d) => {
-      val toks = Tables.documents(s, d)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("_t"))
-      toks.select(col("doc_id"), explode(Dedup.shinglesFromTokens(col("_t"), 8)).as("_span"))
+      Tables.documents(s, d)
+        .select(col("doc_id"), explode(Dedup.shingles(col("text"), 8)).as("_span"))
         .groupBy(md5(col("_span")).as("span_md5"))
         .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("first_doc"))
         .filter(col("n_docs") >= 2)
@@ -4741,10 +4740,7 @@ object PipelineQueries {
   private def lmTermNanos(s: SparkSession, d: String): Seq[(String, Long)] =
     lmTermMemo.computeIfAbsent(d, _ => {
       val docs = Tables.documents(s, d)
-      val bigrams = when(length(col("text")) < 2, array().cast("array<string>"))
-        .otherwise(expr(
-          "transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))"))
-      val bgCounts = docs.select(explode(bigrams).as("bg"))
+      val bgCounts = docs.select(explode(TextAnalysis.charNgrams(col("text"), 2)).as("bg"))
         .groupBy(col("bg")).agg(count(lit(1)).as("cab"))
         .withColumn("ctx", substring(col("bg"), 1, 1))
       val ctxCounts = bgCounts.groupBy(col("ctx")).agg(sum(col("cab")).as("ca"))

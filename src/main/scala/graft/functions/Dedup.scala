@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftColumns
 
 /**
  * Deduplication operators for training-data pipelines: exact,
@@ -19,49 +20,36 @@ import org.apache.spark.sql.functions._
  */
 object Dedup {
 
-  /** Distinct word n-gram shingles from a MATERIALIZED token-array
-   * column. The tokens must be a plain column reference, not an
-   * expression: a lambda body re-evaluates every captured expression
-   * per element, so shingling over an inline `tokens(text)` tree
-   * re-tokenizes the document once per shingle element (measured 25×
-   * slower). [[shingleSets]] stages the projections correctly. */
-  def shinglesFromTokens(toks: Column, n: Int): Column =
-    array_distinct(ngramsFromTokens(toks, n))
+  /** Distinct word n-gram shingles of a token-array column, first
+   * occurrences in document order. Native [[expressions.WordNgrams]]. */
+  def shinglesFromTokens(toks: Column, n: Int): Column = wordNgrams(toks, n, distinct = true)
 
   /** Non-distinct word n-grams in document order — the multiset form
    * repetition metrics need (a shingle SET can't tell "once" from
    * "fifty times"). */
-  def ngramsFromTokens(toks: Column, n: Int): Column =
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(j => element_at(toks, i + lit(j))): _*)))
+  def ngramsFromTokens(toks: Column, n: Int): Column = wordNgrams(toks, n, distinct = false)
 
-  /** Convenience single-expression form (tests / small data). Prefer
-   * [[shingleSets]] on the hot path — see [[shinglesFromTokens]]. */
+  private def wordNgrams(toks: Column, n: Int, distinct: Boolean): Column =
+    GraftColumns.column(expressions.WordNgrams(GraftColumns.expression(toks), n, distinct))
+
+  /** Distinct word n-gram shingles of a text column. */
   def shingles(text: Column, n: Int): Column =
     shinglesFromTokens(TextAnalysis.tokens(text), n)
 
-  /** Character n-gram shingles from a MATERIALIZED whitespace-normalized
+  /** Distinct character n-gram shingles of a whitespace-normalized
    * text column — the right unit for scripts without whitespace word
    * boundaries (CJK) or for whitespace-insensitive matching. Same
    * distinct-set semantics as word shingles, so the sets drop into the
    * same jaccard/minhash machinery. */
   def charShinglesFromNormalized(t: Column, n: Int): Column =
-    array_distinct(
-      when(length(t) < n, array().cast("array<string>"))
-        .otherwise(transform(
-          sequence(lit(1), length(t) - (n - 1)),
-          i => t.substr(i, lit(n)))))
+    GraftColumns.column(expressions.CharNgrams(GraftColumns.expression(t), n, distinct = true))
 
   /** (doc_id, char-shingle set), staged + materialized like
    * [[shingleSets]] (same EAGER row-block materialization — see that
    * method's AQE note and [[Stage.eager]]). */
   def charShingleSets(df: DataFrame, keyCol: String, textCol: String, n: Int): DataFrame =
-    Stage.eager(Stage.fanOut(df)
-      .select(col(keyCol).as("doc_id"),
-        regexp_replace(col(textCol), "\\s+", " ").as("_t"))
-      .select(col("doc_id"), charShinglesFromNormalized(col("_t"), n).as("sh_set")))
+    Stage.eager(Stage.fanOut(df).select(col(keyCol).as("doc_id"),
+      charShinglesFromNormalized(regexp_replace(col(textCol), "\\s+", " "), n).as("sh_set")))
 
   /**
    * Cache-ownership discipline for the composed operators (the batch
@@ -110,9 +98,7 @@ object Dedup {
    * single-split local scan it ran in ONE task (profiled 430-700 ms
    * serial jobs); no-op at warehouse split counts. */
   private def shingleSetsPlan(df: DataFrame, keyCol: String, textCol: String, n: Int): DataFrame =
-    Stage.fanOut(df)
-      .select(col(keyCol).as("doc_id"), TextAnalysis.tokens(col(textCol)).as("_t"))
-      .select(col("doc_id"), shinglesFromTokens(col("_t"), n).as("sh_set"))
+    Stage.fanOut(df).select(col(keyCol).as("doc_id"), shingles(col(textCol), n).as("sh_set"))
 
   /** (doc_id, shingle set) — MATERIALIZED once as row blocks
    * ([[Stage.eager]]) so shingling runs a single time per corpus. At
@@ -271,7 +257,6 @@ object Dedup {
       fpp: Double = 0.01): Array[Byte] = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.graftshim.GraftColumns
     val numBits = org.apache.spark.util.sketch.BloomFilter
       .optimalNumOfBits(expectedItems, fpp)
     val agg = new BloomFilterAggregate(
@@ -287,7 +272,6 @@ object Dedup {
    * executors as a literal inside the task binary. */
   def bloomMightContain(bloom: Array[Byte], c: Column): Column = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
-    import org.apache.spark.sql.graftshim.GraftColumns
     GraftColumns.column(BloomFilterMightContain(
       Literal(bloom, org.apache.spark.sql.types.BinaryType),
       XxHash64(Seq(GraftColumns.toExpression(c)), 42L)))
@@ -609,13 +593,9 @@ object Dedup {
     // [[shingleSets]]); fanOut parallelizes the single-split tokenize
     val toks = Stage.eager(Stage.fanOut(df).select(col(keyCol).as("doc_id"),
       TextAnalysis.tokens(col(textCol)).as("_t")))
-    val occ = toks.select(col("doc_id"), explode(
-      when(size(col("_t")) < n, array().cast("array<struct<pos:int,span:string>>"))
-        .otherwise(transform(sequence(lit(1), size(col("_t")) - (n - 1)),
-          i => struct(i.as("pos"),
-            concat_ws(" ", (0 until n).map(j => element_at(col("_t"), i + lit(j))): _*)
-              .as("span"))))).as("u"))
-      .select(col("doc_id"), col("u.pos").as("pos"), md5(col("u.span")).as("span_md5"))
+    val occ = toks.select(col("doc_id"),
+        posexplode(ngramsFromTokens(col("_t"), n)).as(Seq("_p", "_span")))
+      .select(col("doc_id"), (col("_p") + 1).as("pos"), md5(col("_span")).as("span_md5"))
     val dup = occ.select(col("doc_id"), col("span_md5")).distinct()
       .groupBy(col("span_md5")).agg(count(lit(1)).as("_nd"))
       .filter(col("_nd") >= minDocs)

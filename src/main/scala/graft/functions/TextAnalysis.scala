@@ -2,11 +2,15 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftColumns
 
 /**
  * Text-analysis primitives for large-scale training-data pipelines:
  * token counting, quality scoring, language ID, document
- * fingerprinting. All pure Column expressions (codegen'd, no UDFs) so
+ * fingerprinting. All pure Column expressions, no UDFs: built-in
+ * functions plus graft's native codegen'd kernels (whitespace
+ * [[expressions.Tokens]], word and character n-grams in
+ * [[expressions.TextKernels]], [[expressions.UnicodeNormalize]]), so
  * they stay inside whole-stage codegen and scale linearly with no
  * shuffle.
  *
@@ -15,9 +19,16 @@ import org.apache.spark.sql.functions._
  */
 object TextAnalysis {
 
-  /** Whitespace tokenization; empty/blank text ⇒ empty array. */
+  /** Whitespace tokenization (runs of Java `\s`, blanks dropped);
+   * empty/blank text ⇒ empty array. Native [[expressions.Tokens]]. */
   def tokens(text: Column): Column =
-    filter(split(text, "\\s+"), t => t =!= "")
+    GraftColumns.column(expressions.Tokens(GraftColumns.expression(text)))
+
+  /** Character n-grams of a string in order (`substring(text, i, n)`
+   * for every start i); fewer than `n` characters ⇒ empty array.
+   * Native [[expressions.CharNgrams]]. */
+  def charNgrams(text: Column, n: Int): Column =
+    GraftColumns.column(expressions.CharNgrams(GraftColumns.expression(text), n, distinct = false))
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -190,16 +201,12 @@ object TextAnalysis {
    * codegen'd Expression: Spark has no built-in normalizer and a UDF
    * would break whole-stage codegen on the full-corpus scan. */
   def nfc(text: Column): Column =
-    org.apache.spark.sql.graftshim.GraftColumns.column(
-      expressions.UnicodeNormalize(
-        org.apache.spark.sql.graftshim.GraftColumns.expression(text), "NFC"))
+    GraftColumns.column(expressions.UnicodeNormalize(GraftColumns.expression(text), "NFC"))
 
   /** NFKC: compatibility composition (also folds ligatures/width
    * variants, e.g. "ﬁ" → "fi") — the aggressive form for dedup keys. */
   def nfkc(text: Column): Column =
-    org.apache.spark.sql.graftshim.GraftColumns.column(
-      expressions.UnicodeNormalize(
-        org.apache.spark.sql.graftshim.GraftColumns.expression(text), "NFKC"))
+    GraftColumns.column(expressions.UnicodeNormalize(GraftColumns.expression(text), "NFKC"))
 
   /** PII patterns as (name, regex, replacement), in redaction order.
    * The regex subset is portable (no backreferences or lookarounds —
@@ -246,22 +253,18 @@ object TextAnalysis {
     md5(array_join(tokens(text), " "))
 
   /** Rolling/shingle fingerprint: the minimum md5 over word n-gram
-   * shingles (a 1-permutation MinHash — stable under small edits).
-   * `sh` must be a materialized shingle-array column (see
-   * Dedup.shinglesFromTokens for why). */
+   * shingles (a 1-permutation MinHash — stable under small edits). */
   def minShingleFingerprint(sh: Column): Column =
     when(size(sh) === 0, md5(lit("")))
       .otherwise(array_min(transform(sh, s => md5(s))))
 
-  /** DataFrame-level fingerprints: (key, fp, min_shingle_fp) with the
-   * token/shingle arrays staged through materialized projections. */
+  /** DataFrame-level fingerprints: (key, fp, min_shingle_fp), both
+   * derived from one staged token array. */
   def fingerprints(df: org.apache.spark.sql.DataFrame, keyCol: String, textCol: String,
       n: Int = 5): org.apache.spark.sql.DataFrame =
     df.select(col(keyCol), tokens(col(textCol)).as("_t"))
-      .select(col(keyCol), array_join(col("_t"), " ").as("_joined"),
-        Dedup.shinglesFromTokens(col("_t"), n).as("_sh"))
-      .select(col(keyCol), md5(col("_joined")).as("fp"),
-        minShingleFingerprint(col("_sh")).as("min_shingle_fp"))
+      .select(col(keyCol), md5(array_join(col("_t"), " ")).as("fp"),
+        minShingleFingerprint(Dedup.shinglesFromTokens(col("_t"), n)).as("min_shingle_fp"))
 
   /**
    * One-call corpus cleaning — the standard pre-training sequence,
@@ -318,16 +321,15 @@ object TextAnalysis {
   def repetitionSignals(df: org.apache.spark.sql.DataFrame, keyCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
     val toks = df.select(col(keyCol), tokens(col(textCol)).as("_t"))
-    val mapSide = toks.select(col(keyCol), col("_t"), size(col("_t")).as("_n"),
-        Dedup.shinglesFromTokens(col("_t"), 5).as("_g5"))
-      .select(
+    val n = size(col("_t"))
+    val mapSide = toks.select(
         col(keyCol),
-        col("_n").as("n_tokens"),
-        when(col("_n") === 0, 0.0).otherwise(round(
-          lit(1.0) - size(array_distinct(col("_t"))).cast("double") / col("_n"),
+        n.as("n_tokens"),
+        when(n === 0, 0.0).otherwise(round(
+          lit(1.0) - size(array_distinct(col("_t"))).cast("double") / n,
           6)).as("dup_token_frac"),
-        when(col("_n") < 5, 0.0).otherwise(round(
-          lit(1.0) - size(col("_g5")).cast("double") / (col("_n") - 4), 6))
+        when(n < 5, 0.0).otherwise(round(
+          lit(1.0) - size(Dedup.shinglesFromTokens(col("_t"), 5)).cast("double") / (n - 4), 6))
           .as("dup_5gram_frac"))
     val bigramTop = toks
       .select(col(keyCol), explode(Dedup.ngramsFromTokens(col("_t"), 2)).as("_bg"))
@@ -461,9 +463,7 @@ object TextAnalysis {
    */
   def bigramLmScore(df: org.apache.spark.sql.DataFrame, idCol: String,
       textCol: String): org.apache.spark.sql.DataFrame = {
-    val bigrams = when(length(col(textCol)) < 2, array().cast("array<string>"))
-      .otherwise(expr(
-        s"transform(sequence(1, length($textCol) - 1), i -> substring($textCol, i, 2))"))
+    val bigrams = charNgrams(col(textCol), 2)
     // (doc, bigram) multiplicities — the only per-doc shuffle
     val docBg = df.select(col(idCol), explode(bigrams).as("bg"))
       .groupBy(col(idCol), col("bg")).agg(count(lit(1)).as("m"))

@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
  * EXACT batch equivalence (pinned by spec): after streaming a corpus
  * through in any micro-batch split, [[currentLabels]] equals the
  * batch labels of `Dedup.connectedComponents(Dedup
- * .minhashDedupPairsFromSets(Dedup.shingleSets(corpus, n), k, bands,
- * threshold))` — with singletons labeled by their own id. This holds
+ * .minhashDedupPairsFromSets(Dedup.shingleSets(corpus, keyCol,
+ * textCol, n), k, bands, threshold))` — with singletons labeled by
+ * their own id. This holds
  * because the union over batches of discovered edges is precisely
  * the batch LSH+verify edge set (a pair sharing a band key is found
  * in the batch where its LATER doc arrives, and verification uses

@@ -2,7 +2,12 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, LambdaFunction}
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
 
 /**
  * Physical-plan assertions: the plans we designed for, not just the
@@ -156,10 +161,75 @@ class PlanSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       l.contains("Exchange hashpartitioning") && l.contains("embedding")), p.take(1200))
   }
 
+  /** Run `body` with `spark.sql.optimizer.excludedRules` cleared: the
+   * shared session may carry the message parser's session-wide
+   * exclusion of InferFiltersFromGenerate, which would hide plans that
+   * only go wrong with the rule on. */
+  private def withAllOptimizerRules[A](body: => A): A = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val saved = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try body
+    finally saved.foreach(spark.conf.set(key, _))
+  }
+
+  /** Every physical node of an executed plan: through adaptive query
+   * stages, subqueries and the cached plans of persisted inputs. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = {
+    val nodes = collectWithSubqueries(p) { case n => n }
+    nodes ++ nodes.flatMap {
+      case s: InMemoryTableScanExec => allNodes(s.relation.cacheBuilder.cachedPlan)
+      case _ => Nil
+    }
+  }
+
   test("decontamination is an equi-join on the shingle key, no cartesian (D9)") {
-    val p = plan("d9_decontaminate")
-    assert(!p.contains("CartesianProduct"), p.take(600))
-    assert(p.contains("HashJoin") || p.contains("SortMergeJoin"))
+    withAllOptimizerRules {
+      val df = SparkEntry.queries("d9_decontaminate")(spark, sf)
+      try {
+        df.collect()
+        val nodes = allNodes(df.queryExecution.executedPlan)
+        val p = nodes.headOption.map(_.toString).getOrElse("")
+        assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]), p.take(600))
+        val shingleJoins = nodes.collect {
+          case j: BroadcastHashJoinExec if j.leftKeys.exists(_.references.exists(_.name == "shingle")) => j
+        }
+        assert(shingleJoins.size == 1, nodes.map(_.nodeName).distinct.mkString(", "))
+        val j = shingleJoins.head
+        val (build, stream) = j.buildSide match {
+          case BuildLeft => (j.left, j.right)
+          case BuildRight => (j.right, j.left)
+        }
+        assert(build.output.exists(_.name == "eval_id"), s"build side is not the eval index: $j")
+        assert(stream.output.exists(_.name == "train_id"), s"stream side is not the train index: $j")
+      } finally df.unpersist()
+    }
+  }
+
+  test("no higher-order function in any Filter condition (D9/D11/D15)") {
+    // filter inference under the shingle explode copies the shingle
+    // expression into a Filter; with a lambda chain there, the scan
+    // re-tokenized each document once per shingle position
+    withAllOptimizerRules {
+      for (q <- Seq("d9_decontaminate", "d11_bloom_decontaminate", "d15_contamination_report")) {
+        val df = SparkEntry.queries(q)(spark, sf)
+        try {
+          df.collect()
+          val conditions = allNodes(df.queryExecution.executedPlan).flatMap {
+            case f: FilterExec => Seq(f.condition)
+            case s: FileSourceScanExec => s.dataFilters
+            case _ => Nil
+          }
+          assert(conditions.nonEmpty, q)
+          val lambdas = conditions.filter(_.exists {
+            case _: LambdaFunction | _: ArrayTransform | _: ArrayFilter => true
+            case _ => false
+          })
+          assert(lambdas.isEmpty,
+            s"$q filters on a higher-order function: ${lambdas.map(_.sql.take(800)).mkString("; ")}")
+        } finally df.unpersist()
+      }
+    }
   }
 
   test("quality classifier is a zero-shuffle codegen pass (T17)") {

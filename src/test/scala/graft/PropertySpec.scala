@@ -216,6 +216,13 @@ class PropertySpec extends SparkTestBase {
     }
   }
 
+  test("text kernels equal the lambda-chain reference on random mixed-whitespace text") {
+    import graft.functions.TextKernelReference
+    forAll(Gen.listOfN(24, TextKernelReference.textGen), n = 4) { texts =>
+      TextKernelReference.assertKernelsMatch(spark, texts, Seq(1, 2, 3, 5))
+    }
+  }
+
   test("PII redaction is idempotent and non-expanding on random PII-laced text") {
     import graft.functions.TextAnalysis
     val word = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)

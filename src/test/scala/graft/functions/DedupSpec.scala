@@ -28,6 +28,14 @@ class DedupSpec extends SparkTestBase {
     assert(docs.select(Dedup.shingles(lit("a b c"), 5)).as[Seq[String]].head().isEmpty)
   }
 
+  test("n-gram and shingle kernels equal the lambda chain, codegen and interpreted") {
+    val repeated = Seq(1, 2).toDF("k").select(
+      Dedup.ngramsFromTokens(TextAnalysis.tokens(lit("a b a b c a b")), 2).as("ng"),
+      Dedup.shingles(lit("a b a b c a b"), 2).as("sh")).as[(Seq[String], Seq[String])].head()
+    assert(repeated == (Seq("a b", "b a", "a b", "b c", "c a", "a b"), Seq("a b", "b a", "b c", "c a")))
+    TextKernelReference.assertKernelsMatch(spark, TextKernelReference.edgeCases, Seq(1, 2, 3, 5))
+  }
+
   test("jaccard pairs find exact and near dups, not unrelated docs") {
     val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", n = 5, threshold = 0.3)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet

@@ -16,6 +16,13 @@ class TextAnalysisSpec extends SparkTestBase {
     assert(one(TextAnalysis.bpeishTokenCount(lit("hello world 42!"))).getInt(0) == 4)
   }
 
+  test("tokens kernel splits on Java \\s runs only, codegen and interpreted") {
+    val toks = Seq(1).toDF("x")
+      .select(TextAnalysis.tokens(lit(" a\tb\u000Bc\fd\re\nf\u00A0g  ")).as("t")).as[Seq[String]].head()
+    assert(toks == Seq("a", "b", "c", "d", "e", "f\u00A0g"))
+    TextKernelReference.assertKernelsMatch(spark, TextKernelReference.edgeCases, Seq(2))
+  }
+
   test("quality score bounded in [0,1]; empty doc scores low") {
     val q = one(TextAnalysis.qualityScore(lit("the quick brown fox and a dog " * 10))).getDouble(0)
     assert(q >= 0.9 && q <= 1.0)
