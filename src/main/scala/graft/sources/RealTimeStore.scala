@@ -1,50 +1,46 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /**
- * Physical layout for the real-time fact table — the one storage-design
- * decision SURVEY §4 puts on us: bucket by series id and sort by
- * timestamp so the interactive query (`id = X AND ts BETWEEN a AND b`)
- * prunes like the DynamoDB key schema it replaces.
+ * Physical layout for the real-time fact table, keyed like the
+ * reference's RealTimeDataTable on (id, messageTimestamp): the
+ * interactive query is `id IN (…) AND messageTimestamp BETWEEN a AND b`.
  *
- * With `bucketBy(n, id) sortBy(id, messageTimestamp)`:
- *  - an equality/isin predicate on `id` prunes to the matching buckets
- *    (SelectedBucketsCount in the scan — asserted in tests);
- *  - within a bucket, rows are sorted by (id, ts), so the BETWEEN scan
- *    is a contiguous range (min/max page skipping in parquet);
- *  - joins and aggregations keyed on `id` are co-partitioned — no
- *    shuffle for per-series work (the condensation groupBy picks up
- *    the bucketing through its first grouping key at cluster scale).
+ * Micro-batch files plus compaction, as in a streaming file sink:
+ *  - `write` and `append` sort each write task's rows by
+ *    (id, messageTimestamp), so an append adds at most one sorted
+ *    parquet file per write task, with no exchange;
+ *  - `compact` range-partitions the live rows on `id` and sorts them
+ *    the same way, folding the micro-batch files into a few base files
+ *    with disjoint `id` ranges.
  *
- * For interactive point queries set
- * `spark.sql.sources.bucketing.autoBucketedScan.enabled=false` —
- * Spark's DisableUnnecessaryBucketedScan rule otherwise skips the
- * bucketed read (and its pruning) for filter-only plans, preferring
- * split parallelism; for the per-series dashboard query pruning wins.
- *
- * TTL compaction rewrites live rows only
- * (IngestPipeline.compactExpired) — the batch analogue of DynamoDB's
- * lazy TTL deletes.
+ * A detail read's `id IN` and timestamp range reach the parquet scan as
+ * pushed filters, and parquet min/max statistics skip the row groups
+ * and pages outside the key range: most of a compacted base file, but
+ * little of an append file, which spans every id of its batch. No
+ * session setting is needed.
  */
 object RealTimeStore {
 
-  /** Create/overwrite the bucketed, sorted real-time table. */
-  def write(rt: DataFrame, table: String, buckets: Int = 32): Unit =
-    rt.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "id")
-      .sortBy("id", "messageTimestamp")
-      .saveAsTable(table)
+  private def sorted(rt: DataFrame): DataFrame =
+    rt.sortWithinPartitions("id", "messageTimestamp")
 
-  /** Append a micro-batch (same bucket spec; Spark validates). */
+  /** Create/overwrite the real-time table. */
+  def write(rt: DataFrame, table: String): Unit =
+    sorted(rt).write.mode(SaveMode.Overwrite).saveAsTable(table)
+
+  /** Append a micro-batch: one sorted file per write task. */
   def append(rt: DataFrame, table: String): Unit =
-    rt.write.mode(SaveMode.Append).insertInto(table)
+    sorted(rt).write.mode(SaveMode.Append).insertInto(table)
 
   def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
 
   /**
-   * Compact away expired rows (run periodically; read-time filtering
-   * uses the same predicate via IngestPipeline.compactExpired).
+   * Drop expired rows (read-time filtering uses the same predicate via
+   * IngestPipeline.compactExpired) and fold the micro-batch files into
+   * `id`-range base files, in one rewrite. Run periodically.
    *
    * Stage-then-swap, no caching: live rows stream from the current
    * table into a `_compacting` table (different location — no
@@ -55,19 +51,19 @@ object RealTimeStore {
    * — never a window with no table (the failure mode of the previous
    * DROP-then-RENAME).
    */
-  def compact(spark: SparkSession, table: String, nowEpochS: Long, buckets: Int = 32): Unit = {
-    stageCompacted(spark, table, nowEpochS, buckets)
+  def compact(spark: SparkSession, table: String, nowEpochS: Long): Unit = {
+    stageCompacted(spark, table, nowEpochS)
     swapCompacted(spark, table)
   }
 
-  /** Step 1: write live rows to `<table>_compacting` (original untouched;
-   * a stale staging table from a prior crash is replaced). */
-  private[sources] def stageCompacted(spark: SparkSession, table: String,
-      nowEpochS: Long, buckets: Int): Unit = {
+  /** Step 1: write live rows, range-partitioned on `id`, to
+   * `<table>_compacting` (original untouched; a stale staging table
+   * from a prior crash is replaced). */
+  private[sources] def stageCompacted(spark: SparkSession, table: String, nowEpochS: Long): Unit = {
     val tmp = table + "_compacting"
     spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    write(graft.streaming.IngestPipeline.compactExpired(spark.table(table), nowEpochS),
-      tmp, buckets)
+    write(graft.streaming.IngestPipeline.compactExpired(spark.table(table), nowEpochS)
+      .repartitionByRange(col("id")), tmp)
   }
 
   /** Step 2: old → `<table>_precompact`, staged → `table`, drop old. */

@@ -100,7 +100,10 @@ object UiReferenceStore {
     // the caller needs the ids (config autocreate pairing).
     val freshIds = fresh.collect().map(_.getString(0)).toSeq.sorted
     if (freshIds.nonEmpty) {
-      val rows = fresh
+      import spark.implicits._
+      // rows come from the collected ids, not from `fresh`: re-running
+      // the read and the anti-join could write other ids than it returns
+      val rows = freshIds.toDF("machineId")
         .withColumn("type", lit(MachineType))
         .withColumn("name", lit(null).cast("string"))
         .withColumn("machineStatus", lit(null).cast("string"))

@@ -131,4 +131,19 @@ class UiReferenceStoreSpec extends SparkTestBase {
     // one DOWN mutation, one UP mutation — the unchanged batch is suppressed
     assert(merged.map(_.machineStatus).toSeq == Seq("DOWN", "UP"))
   }
+
+  test("ensureMachines writes exactly the ids it returns") {
+    val path = Files.createTempDirectory("graft-uiref-once").toString + "/state"
+    // a different id on every evaluation of the input plan: re-running
+    // it after the collect would write other ids than it returns
+    val nextId = udf(() => s"m${FreshIdCounter.n.incrementAndGet()}").asNondeterministic()
+    val ids = spark.range(1).select(nextId().as("machineId"))
+    val created = UiReferenceStore.ensureMachines(spark, path, ids, nowEpochS = 700)
+    assert(created.size == 1)
+    assert(UiReferenceStore.read(spark, path).select("machineId").as[String].collect().toSeq == created)
+  }
+}
+
+object FreshIdCounter {
+  val n = new java.util.concurrent.atomic.AtomicInteger()
 }
