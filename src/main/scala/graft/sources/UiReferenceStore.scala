@@ -1,8 +1,9 @@
 package graft.sources
 
 import graft.streaming.IngestPipeline.StatusUpdate
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * Reference-state table (UIReferenceTable analogue,
@@ -22,19 +23,20 @@ import org.apache.spark.sql.functions._
  * status-bearing rows — so replaying a batch (foreachBatch retry) or
  * merging the same update twice is a no-op, out-of-order merges
  * converge, and a real status always beats a first-sight placeholder.
- * Implemented as read→union→keep-latest→overwrite on parquet; on a
- * transactional table format the same keep-latest rule becomes the
- * MERGE condition.
+ * First-sight registration is an append of one small file of
+ * placeholder rows; [[merge]] is the one rewrite (read→union→
+ * keep-latest→staged overwrite on parquet) and folds those files back
+ * into the base. On a transactional table format the same keep-latest
+ * rule becomes the MERGE condition.
  */
 object UiReferenceStore {
 
   private val MachineType = "MACHINE"
 
-  private def emptyState(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq.empty[(String, String, String, String, Long)]
-      .toDF("machineId", "type", "name", "machineStatus", "machineStatusUpdatedTimestamp")
-  }
+  /** Fixed row shape: a read passes it instead of inferring one (no
+   * Spark job), and a column an older store lacks reads as null. */
+  private val Schema = StructType.fromDDL("machineId STRING, type STRING, name STRING, " +
+    "machineStatus STRING, machineStatusUpdatedTimestamp BIGINT")
 
   /** Filesystem handle through the Hadoop API so paths work on any
    * supported scheme (file://, hdfs://, s3a://), not just local disk. */
@@ -43,17 +45,14 @@ object UiReferenceStore {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** Current state; a path with no data file yet (missing, or only the
+   * `_temporary` of a crashed first append) reads as empty. */
   def read(spark: SparkSession, path: String): DataFrame = {
     val (f, p) = fs(spark, path)
-    if (f.exists(p)) {
-      // align older stores that predate the type/name columns
-      val df = spark.read.parquet(path)
-      Seq("type" -> lit(MachineType), "name" -> lit(null).cast("string"))
-        .foldLeft(df) { case (d, (c, v)) =>
-          if (d.columns.contains(c)) d else d.withColumn(c, v) }
-        .select(col("machineId"), col("type"), col("name"),
-          col("machineStatus"), col("machineStatusUpdatedTimestamp"))
-    } else emptyState(spark)
+    val df =
+      if (f.exists(p)) spark.read.schema(Schema).parquet(path)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), Schema)
+    df.withColumn("type", coalesce(col("type"), lit(MachineType)))
   }
 
   /** Keep-latest-per-machine of the full row set. Status-bearing rows
@@ -82,9 +81,9 @@ object UiReferenceStore {
   }
 
   /**
-   * First-sight machine registration (index.ts:154-163): append a
-   * MACHINE row with null name/status for every machineId not yet in
-   * the store. Returns the ids actually created (for pairing with the
+   * First-sight machine registration (index.ts:154-163): append one
+   * file of MACHINE rows with null name/status for the machineIds not
+   * yet in the store. Returns the ids actually created (for pairing with the
    * config-table autocreate). Idempotent — re-registering is a no-op.
    */
   def ensureMachines(spark: SparkSession, path: String, machineIds: DataFrame,
@@ -102,13 +101,14 @@ object UiReferenceStore {
     if (freshIds.nonEmpty) {
       import spark.implicits._
       // rows come from the collected ids, not from `fresh`: re-running
-      // the read and the anti-join could write other ids than it returns
-      val rows = freshIds.toDF("machineId")
+      // the read and the anti-join could write other ids than it returns.
+      // They are absent from the state, so the append keeps one row per id.
+      freshIds.toDF("machineId")
         .withColumn("type", lit(MachineType))
         .withColumn("name", lit(null).cast("string"))
         .withColumn("machineStatus", lit(null).cast("string"))
         .withColumn("machineStatusUpdatedTimestamp", lit(nowEpochS))
-      writeState(spark, path, keepLatest(state.unionByName(rows)))
+        .coalesce(1).write.mode(SaveMode.Append).parquet(path)
     }
     freshIds
   }

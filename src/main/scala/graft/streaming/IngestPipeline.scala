@@ -119,9 +119,10 @@ object IngestPipeline {
       registerMachines: DataFrame => Unit = null)(implicit spark: SparkSession): org.apache.spark.sql.streaming.StreamingQuery = {
     // CONTRACT: loadState() returns the machine-reference table — a
     // FLEET-sized dimension (one row per machine; thousands at plant
-    // scale), re-read per micro-batch for hot reload. The two per-batch
-    // reads below (registration anti-join, change suppression) are
-    // cheap ONLY under that bound — do not point loadState at a
+    // scale), called once per micro-batch for hot reload. That snapshot
+    // serves both anti-joins below (registration; change suppression,
+    // which placeholders registered since never match: null status).
+    // Cheap ONLY under that bound — do not point loadState at a
     // corpus/events-sized table; an events-scale state source belongs
     // in mapGroupsWithState, not a per-batch full read.
     import spark.implicits._
@@ -134,17 +135,14 @@ object IngestPipeline {
         val classified = parseBatch(batch, payloadCol, formats, machineConfigs)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
+        val state = Option(loadState).map(_.apply())
         if (registerMachines != null) {
           // any parsed message from an unseen machine triggers creation
           // (index.ts:53-57 filters on UI_REFERENCE_DATA membership)
           val batchIds = classified.filter(col("machineId").isNotNull)
             .select(col("machineId")).distinct()
-          val newIds = Option(loadState).map(_.apply()) match {
-            case Some(state) =>
-              batchIds.join(state.select(col("machineId")), Seq("machineId"), "left_anti")
-            case None => batchIds
-          }
-          registerMachines(newIds)
+          registerMachines(state.fold(batchIds)(st =>
+            batchIds.join(st.select(col("machineId")), Seq("machineId"), "left_anti")))
         }
         appendFacts(MessageParser.toRealTime(classified, expirationHours))
         val statusMsgs = classified
@@ -158,14 +156,9 @@ object IngestPipeline {
             StatusUpdate(mid, last.machineStatus, last.epochSeconds)
           }
         // change suppression against current reference state
-        val changed = Option(loadState).map(_.apply()) match {
-          case Some(state) =>
-            folded.join(
-              state.select(col("machineId"), col("machineStatus")),
-              Seq("machineId", "machineStatus"), "left_anti").as[StatusUpdate]
-          case None => folded
-        }
-        mergeStatuses(changed)
+        mergeStatuses(state.fold(folded)(st => folded.join(
+          st.select(col("machineId"), col("machineStatus")),
+          Seq("machineId", "machineStatus"), "left_anti").as[StatusUpdate]))
         } finally { classified.unpersist(); () }
         ()
       }

@@ -142,6 +142,100 @@ class UiReferenceStoreSpec extends SparkTestBase {
     assert(created.size == 1)
     assert(UiReferenceStore.read(spark, path).select("machineId").as[String].collect().toSeq == created)
   }
+
+  /** Data files of a store directory, name → (length, modification time). */
+  private def dataFiles(path: String): Map[String, (Long, Long)] =
+    Option(new java.io.File(path).listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .map(f => f.getName -> (f.length(), f.lastModified())).toMap
+
+  test("a state path with no data file yet reads as the empty state, and later batches proceed") {
+    // what a first registration append leaves when it crashes after the
+    // committer created its scratch directory
+    val path = Files.createTempDirectory("graft-uiref-crashed").toString + "/state"
+    new java.io.File(s"$path/_temporary/0").mkdirs()
+    val empty = UiReferenceStore.read(spark, path)
+    assert(empty.columns.toSeq ==
+      Seq("machineId", "type", "name", "machineStatus", "machineStatusUpdatedTimestamp"))
+    assert(empty.count() == 0)
+    assert(UiReferenceStore.asInitialState(spark, path).collect().isEmpty)
+    assert(UiReferenceStore.ensureMachines(spark, path, Seq("m1").toDF("machineId"), 10) == Seq("m1"))
+    UiReferenceStore.merge(spark, path, Seq(StatusUpdate("m1", "UP", 20), StatusUpdate("m2", "DOWN", 30)).toDS())
+    assert(UiReferenceStore.asInitialState(spark, path).collect().toSet == Set(("m1", "UP"), ("m2", "DOWN")))
+  }
+
+  test("read starts no Spark job (fixed schema, no inference)") {
+    val path = Files.createTempDirectory("graft-uiref-nojob").toString + "/state"
+    UiReferenceStore.merge(spark, path, Seq(StatusUpdate("m1", "UP", 1)).toDS())
+    UiReferenceStore.ensureMachines(spark, path, Seq("m2").toDF("machineId"), 2)
+    val sc = spark.sparkContext
+    val group = s"uiref-read-${System.nanoTime()}"
+    val marker = s"$group-marker"
+    val probeJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == group)) probeJobs.incrementAndGet()
+        if (props.exists(_.getProperty("spark.jobGroup.id") == marker)) markerSeen.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "UiReferenceStore.read probe")
+      UiReferenceStore.read(spark, path)
+      // listener events arrive in order, so once this job's start is
+      // seen every job the read might have started has been counted
+      sc.setJobGroup(marker, "listener barrier")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(probeJobs.get() == 0, s"read started ${probeJobs.get()} Spark job(s)")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a store written without type/name columns reads back as MACHINE with a null name") {
+    val path = Files.createTempDirectory("graft-uiref-old").toString + "/state"
+    Seq(("m1", "UP", 5L)).toDF("machineId", "machineStatus", "machineStatusUpdatedTimestamp")
+      .write.parquet(path)
+    val rows = UiReferenceStore.read(spark, path)
+      .as[(String, String, Option[String], Option[String], Long)].collect().toSeq
+    assert(rows == Seq(("m1", "MACHINE", None, Some("UP"), 5L)))
+    // and the store keeps working: m1 is known, a merge folds in the new shape
+    assert(UiReferenceStore.ensureMachines(spark, path, Seq("m1", "m2").toDF("machineId"), 6) == Seq("m2"))
+    UiReferenceStore.merge(spark, path, Seq(StatusUpdate("m1", "DOWN", 7)).toDS())
+    assert(UiReferenceStore.read(spark, path)
+      .as[(String, String, Option[String], Option[String], Long)].collect().toSet == Set(
+      ("m1", "MACHINE", None, Some("DOWN"), 7L), ("m2", "MACHINE", None, None, 6L)))
+  }
+
+  test("registration appends one file and leaves existing files in place; merge folds it") {
+    val path = Files.createTempDirectory("graft-uiref-append").toString + "/state"
+    UiReferenceStore.merge(spark, path, Seq(StatusUpdate("m1", "UP", 1), StatusUpdate("m2", "UP", 1)).toDS())
+    val base = dataFiles(path)
+    assert(base.nonEmpty)
+    // fresh ids: exactly one new data file, every existing file untouched
+    assert(UiReferenceStore.ensureMachines(spark, path,
+      Seq("m1", "m3", "m4", "m5").toDF("machineId"), 2) == Seq("m3", "m4", "m5"))
+    val afterFresh = dataFiles(path)
+    assert(afterFresh.size == base.size + 1)
+    assert(base.forall { case (n, meta) => afterFresh.get(n).contains(meta) })
+    // no fresh ids, and a replay of the same ids: nothing registered, no file
+    assert(UiReferenceStore.ensureMachines(spark, path, Seq("m1", "m2").toDF("machineId"), 3).isEmpty)
+    assert(UiReferenceStore.ensureMachines(spark, path,
+      Seq("m3", "m4", "m5").toDF("machineId"), 3).isEmpty)
+    assert(dataFiles(path) == afterFresh)
+    def idCounts = UiReferenceStore.read(spark, path).groupBy("machineId").count()
+      .as[(String, Long)].collect().toMap
+    assert(idCounts == Seq("m1", "m2", "m3", "m4", "m5").map(_ -> 1L).toMap)
+    // the next merge is the rewrite: placeholder file folded, one row per id
+    UiReferenceStore.merge(spark, path, Seq(StatusUpdate("m3", "DOWN", 4)).toDS())
+    assert(idCounts == Seq("m1", "m2", "m3", "m4", "m5").map(_ -> 1L).toMap)
+    assert(UiReferenceStore.asInitialState(spark, path).collect().toSet ==
+      Set(("m1", "UP"), ("m2", "UP"), ("m3", "DOWN")))
+  }
 }
 
 object FreshIdCounter {

@@ -184,6 +184,55 @@ class IngestPipelineSpec extends SparkTestBase {
         "the per-batch full-table read count must stay bounded (≤ 2/batch)")
   }
 
+  test("one loadState snapshot per batch serves registration and change suppression") {
+    implicit val sqlCtx = spark.sqlContext
+    implicit val s = spark
+    val statePath = java.nio.file.Files.createTempDirectory("graft-one-read").toString + "/state"
+    val goodTs = "2021-03-05 18:16:10.517000+00:00"
+    def payload(machine: String, value: String): String = {
+      val json = s"""{"messages":[{"name":"$machine/status","quality":"GOOD","timestamp":"$goodTs","value":"$value"}]}"""
+      java.util.Base64.getEncoder.encodeToString(json.getBytes("UTF-8"))
+    }
+    val machineConfigs = Seq("s/a/l/m1", "s/a/l/m2").map(m => (m, "status", "pc", "u", "d", "i"))
+      .toDF("machineId", "statusTag", "productionCountTag",
+        "statusUpValues", "statusDownValues", "statusIdleValues")
+    val stateReads = new java.util.concurrent.atomic.AtomicInteger(0)
+    var batches = 0
+    val merged = scala.collection.mutable.ArrayBuffer[IngestPipeline.StatusUpdate]()
+    val input = MemoryStream[String]
+    val query = IngestPipeline.runIngest(
+      input.toDF().withColumnRenamed("value", "payload"),
+      "payload",
+      loadConfigs = () => (Seq(MessageFormatConfig(id = "DEFAULT")), machineConfigs),
+      appendFacts = _ => { batches += 1 },
+      mergeStatuses = ds => {
+        val ups = ds.collect()
+        merged ++= ups
+        graft.sources.UiReferenceStore.merge(spark, statePath, ups.toSeq.toDS())
+      },
+      loadState = () => {
+        stateReads.incrementAndGet()
+        graft.sources.UiReferenceStore.read(spark, statePath)
+      },
+      registerMachines = ids => {
+        graft.sources.UiReferenceStore.ensureMachines(spark, statePath, ids, nowEpochS = 1); ()
+      })
+    input.addData(payload("s/a/l/m1", "d"))
+    query.processAllAvailable()
+    // m1 unchanged (suppressed against the snapshot), m2 first seen
+    input.addData(payload("s/a/l/m1", "d"), payload("s/a/l/m2", "u"))
+    query.processAllAvailable()
+    input.addData(payload("s/a/l/m2", "u"))
+    query.processAllAvailable()
+    query.stop()
+    assert(batches == 3)
+    assert(stateReads.get() == batches, s"loadState called ${stateReads.get()} times over $batches batches")
+    assert(merged.map(u => u.machineId -> u.machineStatus).toSeq ==
+      Seq("s/a/l/m1" -> "DOWN", "s/a/l/m2" -> "UP"))
+    val ids = graft.sources.UiReferenceStore.read(spark, statePath).select("machineId").as[String].collect()
+    assert(ids.sorted.toSeq == Seq("s/a/l/m1", "s/a/l/m2"))
+  }
+
   test("TTL compaction retains only unexpired rows") {
     val rt = Seq(("STATUS_m", 100L, "UP", 1000L), ("STATUS_m", 200L, "DOWN", 2000L))
       .toDF("id", "messageTimestamp", "value", "expirationTimestamp")
