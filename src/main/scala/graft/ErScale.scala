@@ -97,7 +97,7 @@ object ErScale {
       }
 
       // stage 2 — agreement gate (a filter on the memoized attributes)
-      // + star closure, run under BOTH gates; entities use the d20
+      // + CC closure, run under BOTH gates; entities use the d20
       // semantics (every name labeled, singletons their own entity)
       def closure(twoAttr: Boolean): (Long, Long) = {
         val pairs = spark.read.parquet(pairsPath)
@@ -107,7 +107,7 @@ object ErScale {
           else col("l_c_nationkey") === col("r_c_nationkey")
         val edges = pairs.filter(gate)
           .select(col("left_str"), col("right_str"))
-        val lab = Dedup.connectedComponentsStar(edges, "left_str", "right_str")
+        val lab = Dedup.connectedComponents(edges, "left_str", "right_str")
         val agg = lab.groupBy(col("component")).agg(count(lit(1)).as("m"))
           .agg(count(lit(1)).as("c"), max(col("m")).as("mx"),
             sum(col("m")).as("linked")).head()

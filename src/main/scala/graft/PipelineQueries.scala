@@ -644,12 +644,11 @@ object PipelineQueries {
         .filter(col("l_c_nationkey") === col("r_c_nationkey") &&
           col("l_c_mktsegment") === col("r_c_mktsegment"))
         .select(col("left_str"), col("right_str"))
-      // star variant, not min-label: serial-key linkage graphs form
-      // long thin CHAINS (one-digit steps), so component diameter
-      // grows with scale — at 10× a 139-member chain needs >20
-      // min-label rounds but ~log² star rounds. Chain topology is
-      // exactly what the star variant is for.
-      val lab = Dedup.connectedComponentsStar(edges, "left_str", "right_str")
+      // serial-key linkage graphs form long thin CHAINS (one-digit
+      // steps) whose diameter grows with scale; the driver union-find
+      // does not depend on diameter, and past its edge limit the
+      // closure runs the O(log² n)-round star variant
+      val lab = Dedup.connectedComponents(edges, "left_str", "right_str")
         .select(col("id").as("c_name"), col("component").as("entity_id"))
       val m = cust.select(col("c_name")).join(lab, Seq("c_name"), "left_outer")
         .select(col("c_name"),
@@ -791,7 +790,8 @@ object PipelineQueries {
     }),
 
     // Dup-cluster labeling: connected components over the Jaccard
-    // pair graph (min-label propagation, O(diameter) rounds)
+    // pair graph (one probe + driver union-find; star rounds past
+    // Dedup.LocalCcMaxEdges pairs)
     "d7_dup_clusters" -> ((s, d) => {
       val pairs = Dedup.jaccardPairs(Tables.documents(s, d), "doc_id", "text",
         n = 5, threshold = 0.5, maxShingleFreq = Some(ShingleFreqCap))

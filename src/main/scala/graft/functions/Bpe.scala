@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
  *     array. The merge is a pure `aggregate` lambda (codegen'd fold,
  *     no UDF); the vocab is `localCheckpoint`ed each round so the
  *     iterative plan can't grow superlinearly (same pattern as
- *     [[Dedup.connectedComponents]]).
+ *     [[Dedup.connectedComponentsStar]]).
  *  3. The fitted vocab rows then HOLD each word's final segmentation,
  *     so applying the tokenizer is a broadcast join from words to
  *     their segment arrays — no per-token merge replay at apply time.
@@ -78,7 +78,7 @@ object Bpe {
    * are the post-merge segmentations.
    *
    * Scale-adaptive dispatch (same pattern as
-   * [[Dedup.connectedComponentsStar]]): the corpus pass always runs
+   * [[Dedup.connectedComponents]]): the corpus pass always runs
    * distributed, but when the resulting VOCAB is small
    * (≤ `inMemoryVocabThreshold` distinct words) the iterative merge
    * learning folds in memory on the driver — 12 sequential

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.GraftColumns
 
@@ -545,7 +545,7 @@ object Dedup {
    * near-dup pairs over original keys, exact dups at jaccard 1.0 —
    * including short-text clones whose shingle sets are empty, which
    * pure LSH cannot see). The dispatch is therefore unobservable in
-   * the output, exactly like [[connectedComponentsAuto]]'s.
+   * the output, exactly like [[connectedComponents]]' regimes.
    */
   def nearDupAuto(df: DataFrame, keyCol: String, textCol: String,
       n: Int = 5, k: Int = 16, bands: Int = 4, threshold: Double = 0.5,
@@ -667,7 +667,7 @@ object Dedup {
    * duplicate CLUSTERS into a kept/dropped decision (the real dedup
    * pipelines keep the best page of a near-dup cluster, not an
    * arbitrary one): label clusters over the near-dup `pairs` via
-   * [[connectedComponentsAuto]], attach a per-doc score, and mark the
+   * [[connectedComponents]], attach a per-doc score, and mark the
    * best-scored doc of each cluster canonical (score DESC, id ASC
    * tie-break). Docs in no pair are their own singleton cluster and
    * always canonical — no document is silently lost.
@@ -682,7 +682,7 @@ object Dedup {
       pairs: DataFrame, aCol: String, bCol: String,
       scores: DataFrame, scoreCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val clusters = connectedComponentsAuto(pairs, aCol, bCol)
+    val clusters = connectedComponents(pairs, aCol, bCol)
       .select(col("id").as("doc_id"), col("component").as("cluster_id"))
     val w = Window.partitionBy(col("cluster_id"))
       .orderBy(col("score").desc, col("doc_id"))
@@ -712,7 +712,7 @@ object Dedup {
    * (the [[md5Hash32]] idiom every oracle constant uses), and
    * proportional in expectation over clusters.
    *
-   * Scale shape: clustering is the [[connectedComponentsAuto]] path
+   * Scale shape: clustering is the [[connectedComponents]] path
    * (same plan as the d7 cluster query — at pipeline scale the label
    * table is the memoized artifact it already produces); the split
    * adds one codegen'd md5 on the label and the existing
@@ -735,7 +735,7 @@ object Dedup {
   }
 
   /** The one split assignment both public faces share: CC labels from
-   * [[connectedComponentsAuto]], singletons restored as their own
+   * [[connectedComponents]], singletons restored as their own
    * cluster, bucket = md5Hash32("split:&lt;seed&gt;:" ++ label) mod
    * 100, buckets read as cumulative upper bounds ((name, bound)…,
    * last bound = 100). */
@@ -745,7 +745,7 @@ object Dedup {
     require(buckets.nonEmpty && buckets.last._2 == 100 &&
       buckets.map(_._2) == buckets.map(_._2).sorted,
       s"buckets must be cumulative bounds ending at 100, got $buckets")
-    val clusters = connectedComponentsAuto(pairs, aCol, bCol)
+    val clusters = connectedComponents(pairs, aCol, bCol)
       .select(col("id").as(outIdCol), col("component").as("cluster_id"))
     val bucket = md5Hash32(concat(lit(s"split:$seed:"),
       col("cluster_id").cast("string"))) % 100
@@ -959,111 +959,62 @@ object Dedup {
   }
 
   /**
-   * Connected components over a near-dup pair list — the clustering
-   * step a dedup pipeline runs after pair generation (keep one
-   * representative per component). Iterative min-label propagation:
-   * each round every vertex takes the min of its own and its
-   * neighbors' labels (one equi-join + hash agg per round, all
-   * shuffles on the vertex key).
+   * Connected components over a pair list — the clustering step a
+   * dedup pipeline runs after pair generation (keep one representative
+   * per component), and the engine's one CC entry point.
+   * Output: (id, component) — component = min id reachable under
+   * Spark's value ordering; every input id is labeled (self-pairs
+   * included), and a null endpoint comes back as (null, null).
    *
-   * Rounds needed = graph diameter. LSH/Jaccard dup clusters are
-   * near-cliques (diameter ≲ 2-3), so this converges in a handful of
-   * rounds at any corpus size; for adversarial long-chain graphs the
-   * swap-in is [[connectedComponentsStar]] (alternating large-star/
-   * small-star, O(log² n) rounds) — [[connectedComponentsAuto]]
-   * dispatches between the two on pair count.
-   *
-   * Each round the label frontier is CHECKPOINTED — iterative
-   * DataFrame algorithms otherwise grow the logical plan every round,
-   * and plan analysis/explain costs turn superlinear long before the
-   * data does. When the session has a RELIABLE checkpoint dir
-   * configured (`spark.sparkContext.setCheckpointDir` → durable
-   * storage), the frontier uses `.checkpoint()`: losing an executor
-   * mid-iteration recovers from storage instead of killing the job.
-   * Without one (local/test mode) it falls back to
-   * `localCheckpoint` — materialize + truncate on executor-local
-   * blocks. Convergence is an exact changed-count per round.
-   *
-   * Output: (id, component) — component = min id reachable.
+   * The graphs the engine builds are small (near-dup pairs of a
+   * corpus, one micro-batch's component merges), and at that size a
+   * distributed CC pays for scheduling, not compute: every round is
+   * several jobs, and the number of rounds grows with the diameter.
+   * So ONE probe (`limit(N + 1).collect()`, N = [[LocalCcMaxEdges]])
+   * brings a graph of at most N edges with a supported id type to the
+   * driver, where [[unionFind]] labels it in one pass whatever its
+   * diameter, and the labels come back as a local relation: nothing
+   * cached or checkpointed to own or release, and exact size
+   * statistics for the joins downstream. Larger graphs, and id types
+   * without a supported ordering, run [[connectedComponentsStar]].
+   * Labels are identical either way.
    */
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 20): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def materialize(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    val edges = pairs.select(col(aCol).as("_src"), col(bCol).as("_dst"))
-      .unionByName(pairs.select(col(bCol).as("_src"), col(aCol).as("_dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = materialize(edges.select(col("_src").as("id")).distinct()
-      .select(col("id"), col("id").as("component")))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val nbrMin = edges.join(labels, col("_dst") === col("id"))
-        .groupBy(col("_src")).agg(min(col("component")).as("_nmin"))
-      // the per-row change flag rides along in the SAME checkpointed
-      // plan (a label only changes when a strictly smaller neighbor
-      // min arrives), so the convergence check below is a scan of the
-      // materialized partitions — not a second shuffle join per round
-      val next = materialize(labels.select(col("id"), col("component").as("_old"))
-        .join(nbrMin, col("id") === col("_src"), "left_outer")
-        .select(col("id"),
-          least(col("_old"), coalesce(col("_nmin"), col("_old"))).as("component"),
-          (col("_nmin").isNotNull && col("_nmin") < col("_old")).as("_changed")))
-      changed = next.filter(col("_changed")).count()
-      labels = next.select(col("id"), col("component"))
-      iter += 1
+  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val local = for {
+      less <- sparkLess(pairs, aCol, bCol)
+      rows = pairs.select(col(aCol), col(bCol)).limit(LocalCcMaxEdges + 1).collect()
+      if rows.length <= LocalCcMaxEdges
+    } yield {
+      val out = new java.util.ArrayList[Row]()
+      unionFind(rows.iterator, less).forEach((x, m) => out.add(Row(x, m)))
+      if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        out.add(Row(null, null))
+      val dt = pairs.schema(aCol).dataType
+      pairs.sparkSession.createDataFrame(out,
+        StructType(Seq(StructField("id", dt), StructField("component", dt))))
     }
-    // Non-convergence guard: min-label needs O(diameter) rounds, and a
-    // long thin chain (serial-key linkage graphs — the d20 topology at
-    // 10×, where a 139-member chain exceeded 20 rounds and silently
-    // split) can exceed maxIter with FEW edges, which the auto
-    // dispatcher's edge-count heuristic cannot see. Returning
-    // unconverged labels is a wrong answer; finish with the
-    // O(log²n)-round star variant instead — identical label contract.
-    // The star pass runs on the PERSISTED symmetric edge set (its node
-    // set and canonical edges materialize eagerly before this method
-    // unpersists), so the caller's pair-generation plan — exactly the
-    // expensive part on workloads big enough to trigger this — is not
-    // recomputed.
-    val out =
-      if (changed > 0) connectedComponentsStar(edges, "_src", "_dst")
-      else labels
-    edges.unpersist()
-    out
+    local.getOrElse(connectedComponentsStar(pairs, aCol, bCol))
   }
 
+  /** Largest edge count [[connectedComponents]] labels on the driver. */
+  val LocalCcMaxEdges: Int = 1000000
+
   /**
-   * Partition-local union-find contraction — the standard two-level
-   * CC pre-pass: each edge partition is collapsed in memory to a
-   * forest of trees, and the partition emits one (member → tree-min)
-   * mapping edge per non-root member. The output is
-   * CONNECTIVITY-EQUIVALENT to the input (a node split across
-   * partitions appears in several trees and its mapping edges bridge
-   * them), but long paths that happen to sit inside one partition
-   * contract to diameter ≤ 2 — exactly the chain topology that costs
-   * the distributed rounds the most (a length-d in-partition chain is
-   * d star rounds saved). Per-partition state is a hash map over the
-   * partition's distinct endpoints: bounded by partition size, the
-   * same budget any in-partition sort already needs.
-   *
-   * Tree minima use SPARK's value ordering (UTF8String binary order
-   * for strings — NOT Java's UTF-16 `compareTo`, which disagrees on
-   * supplementary planes), so downstream `min`/`least` arithmetic
-   * composes bit-identically. Returns None for id types without a
-   * supported ordering — caller falls back to the uncontracted edge
-   * set (pure optimization, never a semantics change).
+   * Strict less-than under SPARK's value ordering for the CC id types
+   * union-find supports (every Dedup/FuzzyJoin caller keys on strings
+   * or integers): UTF8String binary order for strings — NOT Java's
+   * UTF-16 `compareTo`, which disagrees on supplementary planes — so
+   * labels compose bit-identically with `min`/`least`. None when the
+   * endpoint columns differ in type or the type has no entry here.
    */
-  private def localContraction(pairs: DataFrame, aCol: String,
-      bCol: String): Option[DataFrame] = {
+  private def sparkLess(pairs: DataFrame, aCol: String,
+      bCol: String): Option[(Any, Any) => Boolean] = {
     import org.apache.spark.sql.types._
     import org.apache.spark.unsafe.types.UTF8String
     val dt = pairs.schema(aCol).dataType
-    // strict less-than under Spark's ordering for the supported key
-    // types (every Dedup/FuzzyJoin caller keys on strings or integers)
-    val lt: Option[(Any, Any) => Boolean] = dt match {
+    if (pairs.schema(bCol).dataType != dt) None
+    else dt match {
       case StringType => Some((a, b) =>
         UTF8String.fromString(a.asInstanceOf[String])
           .compareTo(UTF8String.fromString(b.asInstanceOf[String])) < 0)
@@ -1073,69 +1024,98 @@ object Dedup {
       case ByteType    => Some((a, b) => a.asInstanceOf[Byte] < b.asInstanceOf[Byte])
       case _           => None
     }
-    lt.map { less =>
-      val spark = pairs.sparkSession
+  }
+
+  /**
+   * Union-find over (a, b) rows: maps every non-null endpoint to the
+   * minimum, under `less`, of its component. A row with a null
+   * endpoint adds its other endpoint as a node and joins nothing.
+   * State is one hash map over the distinct endpoints.
+   */
+  private def unionFind(pairs: Iterator[Row],
+      less: (Any, Any) => Boolean): java.util.HashMap[Any, Any] = {
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    pairs.foreach { row =>
+      val a = row.get(0); val b = row.get(1)
+      if (a != null) parent.putIfAbsent(a, a)
+      if (b != null) parent.putIfAbsent(b, b)
+      if (a != null && b != null) {
+        val ra = find(a); val rb = find(b)
+        if (ra != rb) parent.put(ra, rb)
+      }
+    }
+    // roots are arbitrary (union order); once every entry points at
+    // its root, one ordered comparison per node finds each tree's min
+    parent.keySet().forEach(x => find(x))
+    val minOf = new java.util.HashMap[Any, Any]()
+    parent.forEach { (x, r) =>
+      val m = minOf.get(r)
+      if (m == null || less(x, m)) minOf.put(r, x)
+    }
+    parent.replaceAll((_, r) => minOf.get(r))
+    parent
+  }
+
+  /**
+   * Partition-local union-find contraction — the standard two-level
+   * CC pre-pass: each edge partition is collapsed in memory by
+   * [[unionFind]], and the partition emits one (member → tree-min)
+   * mapping edge per non-min member. The output is
+   * CONNECTIVITY-EQUIVALENT to the input (a node split across
+   * partitions appears in several trees and its mapping edges bridge
+   * them), but long paths that happen to sit inside one partition
+   * contract to diameter ≤ 2 — exactly the chain topology that costs
+   * the distributed rounds the most (a length-d in-partition chain is
+   * d star rounds saved). Per-partition state is a hash map over the
+   * partition's distinct endpoints: bounded by partition size, the
+   * same budget any in-partition sort already needs.
+   *
+   * Returns None for id types [[sparkLess]] does not support — caller
+   * falls back to the uncontracted edge set (pure optimization, never
+   * a semantics change).
+   */
+  private def localContraction(pairs: DataFrame, aCol: String,
+      bCol: String): Option[DataFrame] = {
+    import org.apache.spark.sql.types._
+    val dt = pairs.schema(aCol).dataType
+    sparkLess(pairs, aCol, bCol).map { less =>
       // deliberate drop to the RDD API: per-partition union-find has
       // no Catalyst form, and `.rdd` here pays one row
       // deserialization over the edge set. A typed
       // `Dataset[(K, K)].mapPartitions` would keep the exchange
       // unsafe-row-backed, but needs an Encoder per supported key
       // type where this one generic path handles them all via the
-      // `lt` dispatch above — revisit only if the deserialization
+      // `sparkLess` dispatch — revisit only if the deserialization
       // ever shows up next to the union-find itself in profiles
       // (measured: the pass still wins its round-dominated regime
       // by 21-46%, SCALE.md round 15).
       val rdd = pairs.select(col(aCol), col(bCol)).rdd.mapPartitions { it =>
-        val parent = new java.util.HashMap[Any, Any]()
-        def find(x: Any): Any = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x
-          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        it.foreach { row =>
-          val a = row.get(0); val b = row.get(1)
-          if (a != null && b != null && a != b) {
-            if (!parent.containsKey(a)) parent.put(a, a)
-            if (!parent.containsKey(b)) parent.put(b, b)
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) parent.put(ra, rb)
-          }
-        }
-        // one ordered comparison per node: tree minima under Spark's
-        // ordering (union order above is arbitrary on purpose)
-        val minOf = new java.util.HashMap[Any, Any]()
-        val keys = parent.keySet().iterator()
-        while (keys.hasNext) {
-          val x = keys.next()
-          val r = find(x)
-          val m = minOf.get(r)
-          if (m == null || less(x, m)) minOf.put(r, x)
-        }
-        val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-        val ks = parent.keySet().iterator()
-        while (ks.hasNext) {
-          val x = ks.next()
-          val m = minOf.get(find(x))
-          if (x != m) out += org.apache.spark.sql.Row(x, m)
-        }
+        val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+        unionFind(it, less).forEach((x, m) => if (x != m) out += Row(x, m))
         out.iterator
       }
       val schema = StructType(Seq(
         StructField("hi", dt, nullable = true),
         StructField("lo", dt, nullable = true)))
-      spark.createDataFrame(rdd, schema)
+      pairs.sparkSession.createDataFrame(rdd, schema)
     }
   }
 
   /**
    * Alternating large-star/small-star connected components (Kiveris
    * et al., "Connected Components in MapReduce and Beyond", 2014) —
-   * the O(log² n)-round swap-in for [[connectedComponents]]'s
-   * O(diameter) min-label propagation. Same output contract: (id,
-   * component = min id reachable), bit-identical labels, so oracles
-   * pinned to the min-label form hold unchanged.
+   * the distributed regime of [[connectedComponents]], for graphs too
+   * large for the driver or keyed by an id type [[sparkLess]] does
+   * not support. Same output contract: (id, component = min id
+   * reachable), bit-identical labels. O(log² n) rounds whatever the
+   * diameter.
    *
    * Per round, over the canonical undirected edge set (hi > lo):
    *  - LARGE-STAR: for every node u, every strictly larger neighbor
@@ -1148,14 +1128,17 @@ object Dedup {
    * is a disjoint union of stars centered at each component's min,
    * read off as labels directly. Convergence is set equality between
    * rounds (|E ∪ E'| = |E| = |E'|) — one distinct-union count, no
-   * second join. Frontiers are checkpointed exactly like
-   * [[connectedComponents]] (reliable dir if configured, else local)
-   * to keep plans flat across rounds.
+   * second join.
    *
-   * Use over min-label when clusters can CHAIN (transitive near-dup
-   * bridges, contaminated crawls): a length-d path costs min-label d
-   * rounds but this ~log d. [[connectedComponentsAuto]] dispatches on
-   * edge count.
+   * Each round the frontier is CHECKPOINTED — iterative DataFrame
+   * algorithms otherwise grow the logical plan every round, and plan
+   * analysis/explain costs turn superlinear long before the data
+   * does. When the session has a RELIABLE checkpoint dir configured
+   * (`spark.sparkContext.setCheckpointDir` → durable storage), the
+   * frontier uses `.checkpoint()`: losing an executor mid-iteration
+   * recovers from storage instead of killing the job. Without one
+   * (local/test mode) it falls back to `localCheckpoint` —
+   * materialize + truncate on executor-local blocks.
    *
    * Before the distributed rounds, [[localContraction]] union-finds
    * each edge partition in memory and rewrites the edge set as
@@ -1166,7 +1149,7 @@ object Dedup {
    * Unsupported id types skip the pre-pass; labels are bit-identical
    * either way.
    */
-  def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
+  private[graft] def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 50): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
@@ -1237,20 +1220,6 @@ object Dedup {
     lbl
   }
 
-  /** Dispatch between [[connectedComponents]] (min-label, O(diameter)
-   * rounds — unbeatable on near-clique dup clusters) and
-   * [[connectedComponentsStar]] (O(log² n) rounds — safe under
-   * chaining) on the observed pair count: past `starFrom` edges the
-   * graph is big enough that one long chain would dominate the job,
-   * and the star rounds' extra per-round shuffle is cheap insurance.
-   * Labels are identical either way, so callers (and oracles) cannot
-   * observe the dispatch. */
-  def connectedComponentsAuto(pairs: DataFrame, aCol: String, bCol: String,
-      starFrom: Long = 1000000L): DataFrame =
-    if (pairs.limit((starFrom + 1).min(Int.MaxValue).toInt).count() > starFrom)
-      connectedComponentsStar(pairs, aCol, bCol)
-    else connectedComponents(pairs, aCol, bCol)
-
   /** Deterministic hyperplane weights: w(plane p, dim d) =
    * nibble1(md5(p|d)) − 7.5 sign pattern, reduced to the sign bit so
    * the signature is sign(v · w[p]). md5-derived ⇒ identical in any
@@ -1285,13 +1254,13 @@ object Dedup {
    *
    * This is [[leakageSafeSplit]]'s train/validation/test
    * parameterization — ONE hash input (`split:&lt;seed&gt;:`), one CC
-   * entry point ([[connectedComponentsAuto]]; labels are identical to
-   * the min-label variant by construction, so the dispatch is
-   * unobservable), via the shared [[clusterCoherentSplit]] core.
+   * entry point ([[connectedComponents]]), via the shared
+   * [[clusterCoherentSplit]] core.
    *
    * Scale shape: the only non-map stages are the near-dup pair space
    * (inverted-index bounded, inherited from the caller) and the CC
-   * label propagation (O(diameter) rounds over edges); the split
+   * probe (one pass over the edges; star rounds past
+   * [[LocalCcMaxEdges]]); the split
    * itself is one broadcast-able left join (cluster labels ≪ docs)
    * plus map-side hashing. No per-split shuffles — downstream writers
    * partition by the `split` column.

@@ -25,7 +25,7 @@ import org.apache.spark.sql.graftshim.GraftColumns
  * with the edge list plus one aggregation shuffled on dst — the
  * standard distributed power iteration; the frontier is
  * localCheckpointed per round so the iterative plan cannot grow
- * (the [[Dedup.connectedComponents]] discipline). State is O(nodes);
+ * (the [[Dedup.connectedComponentsStar]] discipline). State is O(nodes);
  * edges stream through the join. Dangling mass: every node gets the
  * same base term, and nodes without out-edges simply contribute
  * nothing (mass is not redistributed) — the common simplification,

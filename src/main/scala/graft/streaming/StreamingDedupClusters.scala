@@ -45,11 +45,14 @@ import org.apache.spark.sql.functions._
  * corpus-sized shuffle lives in [[compact]], which a pipeline runs
  * on a maintenance cadence. Relabel volume is bounded by the member
  * count of the components the batch actually merges. The per-batch
- * component merge runs distributed CC on the COMPONENT graph
- * (nodes = affected component ids), which is bounded by the batch's
- * candidate count, not the corpus. At warehouse scale the stores
- * would be bucketed by their join keys to prune the scans too; the
- * read path is already shaped for that.
+ * component merge runs [[Dedup.connectedComponents]] on the COMPONENT
+ * graph (nodes = affected component ids), which is bounded by the
+ * batch's candidate count, not the corpus — so it is one probe and a
+ * driver union-find whose labels come back as a local relation: the
+ * batch's plans stay the same size however many components it
+ * chains, and there is nothing extra to cache or release. At
+ * warehouse scale the stores would be bucketed by their join keys to
+ * prune the scans too; the read path is already shaped for that.
  *
  * Replay idempotency (foreachBatch is at-least-once): all reads
  * exclude rows stamped with the CURRENT batch id, so a replayed
@@ -63,12 +66,18 @@ object StreamingDedupClusters {
   /** batch_id on compacted rows — below any live micro-batch id. */
   val PreHistoryBatchId: Long = -1L
 
-  private def readLog(spark: SparkSession, dir: String, schema: String): DataFrame =
-    try spark.read.parquet(dir)
-    catch { case _: Exception =>
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
-    }
+  /** A log as written, or the empty log when nothing was written yet.
+   * The path is checked first: reading a missing one makes Spark log a
+   * stack-traced WARN before it throws. A log directory with no data
+   * file (a failed first append) also reads as empty. */
+  private def readLog(spark: SparkSession, dir: String, schema: String): DataFrame = {
+    def empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+      org.apache.spark.sql.types.StructType.fromDDL(schema))
+    val p = new org.apache.hadoop.fs.Path(dir)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) empty
+    else try spark.read.parquet(dir)
+    catch { case _: org.apache.spark.sql.AnalysisException => empty }
+  }
 
   private def bandsLog(spark: SparkSession, path: String): DataFrame =
     readLog(spark, s"$path/bands",
@@ -177,7 +186,8 @@ object StreamingDedupClusters {
         .select(coalesce(col("_ca"), col("doc_a")).as("ca"),
           coalesce(col("_cb"), col("doc_b")).as("cb"))
         .filter(col("ca") =!= col("cb")).distinct()
-      val merges = mergeComponents(compEdges, own)
+      val merges = Dedup.connectedComponents(compEdges, "ca", "cb")
+        .select(col("id").as("_node"), col("component").as("_mcomp"))
 
       // Relabel members of components whose id changed. Label
       // monotonicity guarantees a row whose comp matches a CURRENT
@@ -215,39 +225,6 @@ object StreamingDedupClusters {
           Seq("doc_id"), "left_semi")
         .select(col("doc_id"), col("comp")).distinct()
     } finally { owned.foreach(_.unpersist()); () }
-  }
-
-  /** Min-label connected components over the batch-bounded COMPONENT
-   * merge graph — same label contract as
-   * [[Dedup.connectedComponents]] (component = min id reachable), but
-   * with every frontier cached through the caller's registry instead
-   * of checkpointed, so a streaming micro-batch releases all of it on
-   * exit (localCheckpoint blocks cannot be freed through the public
-   * Dataset API). The merge graph is bounded by the batch's candidate
-   * count and near-clique in practice; rounds stay in the low single
-   * digits, so plan growth without checkpoint truncation is benign. */
-  private def mergeComponents(compEdges: DataFrame,
-      own: DataFrame => DataFrame): DataFrame = {
-    val und = own(compEdges.select(col("ca").as("_src"), col("cb").as("_dst"))
-      .unionByName(compEdges.select(col("cb").as("_src"), col("ca").as("_dst")))
-      .distinct())
-    var labels = own(und.select(col("_src").as("_node")).distinct()
-      .select(col("_node"), col("_node").as("_mcomp")))
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < 25) {
-      val nbrMin = und.join(labels, col("_dst") === col("_node"))
-        .groupBy(col("_src")).agg(min(col("_mcomp")).as("_nmin"))
-      val next = own(labels.select(col("_node"), col("_mcomp").as("_old"))
-        .join(nbrMin, col("_node") === col("_src"), "left_outer")
-        .select(col("_node"),
-          least(col("_old"), coalesce(col("_nmin"), col("_old"))).as("_mcomp"),
-          (col("_nmin").isNotNull && col("_nmin") < col("_old")).as("_chg")))
-      changed = next.filter(col("_chg")).count()
-      labels = next
-      iter += 1
-    }
-    labels.select(col("_node"), col("_mcomp"))
   }
 
   /** Attach to a streaming document source: per-batch labels land in

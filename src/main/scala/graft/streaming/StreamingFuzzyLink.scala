@@ -14,8 +14,10 @@ import org.apache.spark.sql.functions._
  * distinct strings seen so far (the parity property
  * `StreamingFuzzyLinkSpec` pins), so an entity-resolution pipeline
  * can maintain its linkage graph incrementally and re-run only the
- * closure ([[graft.functions.Dedup.connectedComponents]] /
- * incremental cluster maintenance) downstream.
+ * closure ([[graft.functions.Dedup.connectedComponents]], a driver
+ * union-find at linkage-graph sizes up to
+ * [[graft.functions.Dedup.LocalCcMaxEdges]] edges, or incremental
+ * cluster maintenance) downstream.
  *
  * Semantics:
  *  - cross-batch: batch strings probe the standing (key, s) store by

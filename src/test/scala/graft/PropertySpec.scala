@@ -184,20 +184,26 @@ class PropertySpec extends SparkTestBase {
     } yield (a, math.min(a + off, 19L)))
     forAll(edgeGen, n = 4) { edges =>
       if (edges.nonEmpty) {
-        val cc = graft.functions.Dedup.connectedComponents(
-          edges.toDF("doc_a", "doc_b"), "doc_a", "doc_b")
-          .as[(Long, Long)].collect().toMap
         // reference union-find
         val parent = scala.collection.mutable.Map[Long, Long]()
         def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else { val r = find(p); parent(x) = r; r } }
         edges.foreach { case (a, b) =>
           val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
         }
-        val groups = cc.keySet.groupBy(find)
-        groups.foreach { case (_, members) =>
-          val expectedLabel = members.min
-          members.foreach(m => assert(cc(m) == expectedLabel, s"member $m of $members"))
-        }
+        val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.toSet
+        val pairs = edges.toDF("doc_a", "doc_b")
+        // both regimes: the driver union-find and the distributed star rounds
+        Seq[(String, (org.apache.spark.sql.DataFrame, String, String) => org.apache.spark.sql.DataFrame)](
+            ("connectedComponents", graft.functions.Dedup.connectedComponents(_, _, _)),
+            ("connectedComponentsStar", graft.functions.Dedup.connectedComponentsStar(_, _, _)))
+          .foreach { case (name, cc) =>
+            val labels = cc(pairs, "doc_a", "doc_b").as[(Long, Long)].collect().toMap
+            assert(labels.keySet == nodes, s"$name labels a different node set")
+            nodes.groupBy(find).foreach { case (_, members) =>
+              val expectedLabel = members.min
+              members.foreach(m => assert(labels(m) == expectedLabel, s"$name: member $m of $members"))
+            }
+          }
       }
     }
   }

@@ -322,46 +322,49 @@ class DedupSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"operator-staged caches leaked: $leaked")
   }
 
-  test("connectedComponents checkpoints reliably when a checkpoint dir is configured") {
+  test("star CC checkpoints reliably when a checkpoint dir is configured") {
     // NOTE: setCheckpointDir is sticky on the shared test session —
     // later suites just gain reliable checkpointing too (correct, a
-    // touch slower). Dir lives under target/ so `clean` removes it.
-    val dir = new java.io.File("target/graft-test-ckpt").getAbsolutePath
-    spark.sparkContext.setCheckpointDir(dir)
+    // touch slower). A fresh dir under target/ (`clean` removes it),
+    // so only the files this call writes are counted.
+    val dir = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target")),
+      "graft-test-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+    def countFiles(f: java.io.File): Int =
+      if (f.isDirectory) Option(f.listFiles).map(_.map(countFiles).sum).getOrElse(0) else 1
+    val before = countFiles(dir)
     val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
+    val cc = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toSet
     assert(cc == Set((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
     // frontier files actually landed in the RELIABLE dir (not executor-local)
-    def countFiles(f: java.io.File): Int =
-      if (f.isDirectory) Option(f.listFiles).map(_.map(countFiles).sum).getOrElse(0) else 1
-    assert(countFiles(new java.io.File(dir)) > 0, "no reliable checkpoint files written")
+    assert(countFiles(dir) > before, "no reliable checkpoint files written")
   }
 
   test("min-label CC past maxIter falls through to star — never returns unconverged labels") {
-    // path 0-1-...-60: diameter 60 > the default 20 min-label rounds.
-    // Pre-guard this SILENTLY split the component (the d20-at-10×
-    // regression: a 139-member serial-key chain split 94/45); the
-    // non-convergence fallback must hand off to the star variant and
-    // return the true single component.
+    // path 0-1-...-60: diameter 60 > the 20 rounds an O(diameter)-round
+    // CC was once capped at (that cap silently split the 139-member d20
+    // serial-key chain at 10x, 94/45). connectedComponents no longer
+    // iterates at all, so a long chain must come back as one component.
     val path = (0L until 60L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val got = Dedup.connectedComponents(path, "doc_a", "doc_b")
       .as[(Long, Long)].collect().toSet
     assert(got == (0L to 60L).map(i => (i, 0L)).toSet)
   }
 
-  test("alternating-star CC: labels identical to min-label, path diameter >> rounds") {
-    // long path 0-1-2-...-255: diameter 255 would cost min-label 255
-    // rounds; the star rounds collapse it in O(log^2 n). maxIter = 12
-    // makes the round bound an ASSERTION — min-label at 12 rounds
-    // would still be far from converged on this graph.
+  test("star CC: same labels as connectedComponents, diameter >> rounds") {
+    // long path 0-1-2-...-255: the star rounds collapse it in
+    // O(log^2 n). maxIter = 12 makes the round bound an ASSERTION — an
+    // O(diameter)-round CC at 12 rounds would still be far from
+    // converged on this graph.
     val path = (0L until 255L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val star = Dedup.connectedComponentsStar(path, "doc_a", "doc_b", maxIter = 12)
       .as[(Long, Long)].collect().toSet
     assert(star == (0L to 255L).map(i => (i, 0L)).toSet)
 
-    // mixed shapes: star/min-label labels agree exactly (two cliques,
-    // a bridge chain, a singleton edge, reversed orders)
+    // mixed shapes: star/union-find labels agree exactly (two
+    // cliques, a bridge chain, a singleton edge, reversed orders)
     val pairs = Seq((2L, 1L), (2L, 3L), (3L, 7L), (7L, 9L), (9L, 8L),
       (20L, 21L), (21L, 22L), (22L, 20L), (40L, 41L)).toDF("doc_a", "doc_b")
     val a = Dedup.connectedComponents(pairs, "doc_a", "doc_b")
@@ -382,11 +385,30 @@ class DedupSpec extends SparkTestBase {
     real.unpersist()
     assert(ml.nonEmpty && ml == st)
 
-    // auto dispatch picks min-label below the threshold, star above —
-    // observable only through identical labels either way
-    val auto = Dedup.connectedComponentsAuto(pairs, "doc_a", "doc_b", starFrom = 3L)
-      .as[(Long, Long)].collect().toSet
-    assert(auto == a)
+    // a null endpoint: both paths return the same rows — the other
+    // endpoint labeled as usual, the null as (null, null)
+    val withNull = Seq((Some(1L), Some(2L)), (Some(3L), None), (None, Some(1L)))
+      .toDF("doc_a", "doc_b")
+    val un = Dedup.connectedComponents(withNull, "doc_a", "doc_b")
+      .as[(Option[Long], Option[Long])].collect().toSet
+    val sn = Dedup.connectedComponentsStar(withNull, "doc_a", "doc_b")
+      .as[(Option[Long], Option[Long])].collect().toSet
+    assert(un == Set((Some(1L), Some(1L)), (Some(2L), Some(1L)), (Some(3L), Some(3L)),
+      (None, None)))
+    assert(un == sn)
+
+    // string ids that UTF-8 (Spark) and UTF-16 (String.compareTo)
+    // order differently: U+FFFD sorts below U+1F600 in UTF-8 bytes
+    // and above its surrogate pair in UTF-16, so the label must be
+    // "\uFFFD"
+    val utf = Seq(("\uD83D\uDE00", "\uFFFD"), ("\uD83D\uDE00x", "\uD83D\uDE00"))
+      .toDF("doc_a", "doc_b")
+    val uu = Dedup.connectedComponents(utf, "doc_a", "doc_b")
+      .as[(String, String)].collect().toSet
+    val us = Dedup.connectedComponentsStar(utf, "doc_a", "doc_b")
+      .as[(String, String)].collect().toSet
+    assert(uu == Set("\uD83D\uDE00", "\uFFFD", "\uD83D\uDE00x").map(_ -> "\uFFFD"))
+    assert(uu == us)
   }
 
   test("star CC local-contraction pre-pass: cross-partition chains, string ordering, type fallback") {

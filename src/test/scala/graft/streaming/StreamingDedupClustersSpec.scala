@@ -3,8 +3,12 @@ package graft.streaming
 import graft.SparkTestBase
 import graft.functions.Dedup
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 class StreamingDedupClustersSpec extends SparkTestBase {
   import spark.implicits._
@@ -157,6 +161,50 @@ class StreamingDedupClustersSpec extends SparkTestBase {
     assert(out("a2") == "a1", "cross-batch cluster join missed")
     assert(labelsOf(s"$dir/store") ==
       Map("a1" -> "a1", "s1" -> "s1", "a2" -> "a1"))
+  }
+
+  /** Nodes of a plan tree, inner plans included: a cached relation
+   * counts its cached plan (an adaptive plan by its input plan), and
+   * each use counts it again. */
+  private def planNodes(t: TreeNode[_]): Int = {
+    val inner = t match {
+      case a: AdaptiveSparkPlanExec => Seq(a.inputPlan)
+      case _ => t.innerChildren
+    }
+    1 + (t.children ++ inner).map(c => planNodes(c.asInstanceOf[TreeNode[_]])).sum
+  }
+
+  test("a batch that chains components keeps every action's plan bounded") {
+    // c0..c3 slide over the word pool 3 words at a time: neighbours
+    // share 9 of 15 distinct shingles (jaccard 0.6), docs two apart
+    // 6 of 18 (0.33), so the batch's component merge graph is the
+    // chain c0-c1-c2-c3. An iterative CC whose frontier feeds each
+    // round twice without cutting the plan doubles it per round.
+    val path = java.nio.file.Files.createTempDirectory("clusters-plansize").toString + "/c"
+    val docs = (0 until 4).map(i => s"c$i" -> text(3 * i, 3 * i + 16))
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val marker = s"plan-size-barrier-${System.nanoTime()}"
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) markerSeen.countDown()
+        else { sizes.add(planNodes(qe.optimizedPlan)); () }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val got = run(path, 0L, docs, bands = 16)
+      assert(got == docs.map(_._1 -> "c0").toMap, s"expected one cluster under c0, got $got")
+      // listener events arrive in order: once the marker query is
+      // seen, every action of the batch has been recorded
+      spark.range(1).select(lit(marker)).collect()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    // this batch's plans peak at 54 nodes with the union-find merge;
+    // a min-label merge over persisted frontiers reached 4,059
+    val largest = sizes.asScala.map(_.intValue).max
+    assert(largest <= 200, s"largest optimized plan has $largest nodes")
   }
 
   test("processBatch leaves no cached blocks behind") {
