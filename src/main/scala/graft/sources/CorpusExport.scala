@@ -9,7 +9,8 @@ import graft.functions.TextAnalysis
  * Sharded training-corpus export — the OUTPUT side of the pipeline:
  * deterministic token-budgeted shards written as JSONL plus a
  * manifest the training loader consumes (file ↔ doc/token counts ↔
- * content checksum), `_SUCCESS`-gated like every other sink here.
+ * content checksum), with a completeness marker like every other sink
+ * here.
  *
  * Shard assignment reuses the [[TextAnalysis.packSequences]] prefix
  * sums (the t15 operator): docs ordered by id within source, shard =
@@ -51,7 +52,8 @@ object CorpusExport {
 
   /**
    * Export: JSONL shards under `outDir/data/source=…/shard=…/` plus
-   * `outDir/manifest` (parquet) and `outDir/_SUCCESS`. Overwrite-safe
+   * `outDir/manifest` (parquet) and the Hadoop job-commit marker in
+   * `outDir` ([[StoreSwap.mark]]). Overwrite-safe
    * and deterministic — rerunning after a partial failure converges to
    * the same layout. Returns the manifest for the caller.
    */
@@ -69,10 +71,8 @@ object CorpusExport {
         .json(s"$outDir/data")
       val m = manifest(assigned, idCol, sourceCol)
       m.write.mode(SaveMode.Overwrite).parquet(s"$outDir/manifest")
-      // _SUCCESS only after BOTH data and manifest are committed
-      val fs = new org.apache.hadoop.fs.Path(outDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.create(new org.apache.hadoop.fs.Path(s"$outDir/_SUCCESS"), true).close()
+      // the marker only after BOTH data and manifest are committed
+      StoreSwap.mark(spark, outDir)
       spark.read.parquet(s"$outDir/manifest")
     } finally assigned.unpersist()
   }

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.StructType
  * converge, and a real status always beats a first-sight placeholder.
  * First-sight registration is an append of one small file of
  * placeholder rows; [[merge]] is the one rewrite (read→union→
- * keep-latest→staged overwrite on parquet) and folds those files back
+ * keep-latest→[[StoreSwap]] rewrite on parquet) and folds those files back
  * into the base. On a transactional table format the same keep-latest
  * rule becomes the MERGE condition.
  */
@@ -38,19 +38,12 @@ object UiReferenceStore {
   private val Schema = StructType.fromDDL("machineId STRING, type STRING, name STRING, " +
     "machineStatus STRING, machineStatusUpdatedTimestamp BIGINT")
 
-  /** Filesystem handle through the Hadoop API so paths work on any
-   * supported scheme (file://, hdfs://, s3a://), not just local disk. */
-  private def fs(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Current state; a path with no data file yet (missing, or only the
-   * `_temporary` of a crashed first append) reads as empty. */
+  /** Current state, after finishing a rewrite that crashed mid-swap
+   * ([[StoreSwap.ready]]); a path with no data file yet (missing, or
+   * only the `_temporary` of a crashed first append) reads as empty. */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val (f, p) = fs(spark, path)
     val df =
-      if (f.exists(p)) spark.read.schema(Schema).parquet(path)
+      if (StoreSwap.ready(spark, path)) spark.read.schema(Schema).parquet(path)
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), Schema)
     df.withColumn("type", coalesce(col("type"), lit(MachineType)))
   }
@@ -124,25 +117,9 @@ object UiReferenceStore {
         when(col("machineId") === machineId, name).otherwise(col("name"))))
   }
 
-  // stage-then-swap so a failed write never truncates current state:
-  // write to .staging, swap current out of the way, rename staging in,
-  // and only then drop the old state. Every rename result is checked —
-  // a false return aborts with the previous state still recoverable.
-  private def writeState(spark: SparkSession, path: String, state: DataFrame): Unit = {
-    val staged = path + ".staging"
-    val backup = path + ".old"
-    state.write.mode(SaveMode.Overwrite).parquet(staged)
-    val (f, target) = fs(spark, path)
-    val stagedP = new org.apache.hadoop.fs.Path(staged)
-    val backupP = new org.apache.hadoop.fs.Path(backup)
-    if (f.exists(backupP)) f.delete(backupP, true)
-    if (f.exists(target)) {
-      require(f.rename(target, backupP), s"could not move current state aside: $path")
-    }
-    require(f.rename(stagedP, target), s"could not promote staged state: $staged -> $path")
-    f.delete(backupP, true)
-    ()
-  }
+  // a failed write leaves the current state in place (StoreSwap)
+  private def writeState(spark: SparkSession, path: String, state: DataFrame): Unit =
+    StoreSwap.swap(spark, path)(state.write.mode(SaveMode.Overwrite).parquet(_))
 
   /** Hydration view for cold-start initial state (machineId → status).
    * First-sight placeholders (null status) are excluded so the first

@@ -158,20 +158,11 @@ object Warehouse {
    * slice — parquet min/max stats then prune per-series range scans
    * (the condensation query's access path) to a few files.
    *
-   * Write-then-swap: the compacted output is fully written to a hidden
-   * temp sibling directory (ignored by Spark scans), and only after
-   * that job succeeds is the old partition directory replaced by a
-   * rename. The source files are never deleted while any job might
-   * still recompute from them — safe against task retries AND executor
-   * loss, unlike a checkpoint-then-overwrite-in-place.
-   *
-   * Crash recovery: a crash between the delete and the rename leaves
-   * the partition's data only in the durable temp dir. On entry this
-   * method locates the partition directory from (path, year, month,
-   * day) values — NOT from the scan's input files, which are empty in
-   * exactly that crash state — and, if a temp sibling exists while the
-   * live dir is missing or data-less, completes the swap by renaming
-   * it back before deciding the partition is empty. Returns the output
+   * The rewrite is a [[StoreSwap]] of the day directory, so the old
+   * files stay until the new ones are complete, and a rewrite that
+   * crashed mid-swap is finished on entry. The day is located from
+   * (path, year, month, day) VALUES, never from a scan's input files,
+   * which are empty in exactly that crash state. Returns the output
    * file count (0 = empty partition, nothing to do).
    */
   def compactPartition(spark: SparkSession, path: String,
@@ -184,49 +175,15 @@ object Warehouse {
     // Locate a partition child dir by VALUE (year=2021 and year=02021
     // both parse to 2021) — robust to whether the writer's partition
     // column was an INT ("month=3") or a formatted STRING ("month=03").
+    // A day caught mid-swap exists only as its stage, which names it.
     def child(parent: Path, colName: String, value: Int): Option[Path] =
       if (!fs.exists(parent)) None
-      else fs.listStatus(parent).collectFirst {
-        case st if st.isDirectory &&
-          st.getPath.getName.startsWith(s"$colName=") &&
-          scala.util.Try(st.getPath.getName.stripPrefix(s"$colName=").trim.toInt)
-            .toOption.contains(value) => st.getPath
-      }
-    def hasDataFiles(dir: Path): Boolean =
-      fs.exists(dir) && fs.listStatus(dir).exists { st =>
-        val n = st.getPath.getName
-        st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-      }
-
-    val monthDir = child(new Path(path), "year", year)
-      .flatMap(child(_, "month", month))
-
-    // Complete an interrupted swap: temp sibling present + live dir
-    // without data files ⇒ the previous run crashed after the delete.
-    // Promotion requires a COMPLETE temp (job-commit _SUCCESS marker +
-    // data files — this method guarantees the marker on its own writes
-    // below, independent of committer conf); a marker-less temp is a
-    // mid-write leftover and is deleted, never swapped into place.
-    monthDir.foreach { m =>
-      fs.listStatus(m).collectFirst {
-        case st if st.isDirectory &&
-          st.getPath.getName.startsWith(".compact_tmp_day=") &&
-          scala.util.Try(st.getPath.getName.stripPrefix(".compact_tmp_day=").trim.toInt)
-            .toOption.contains(day) => st.getPath
-      }.foreach { tmp =>
-        val complete = fs.exists(new Path(tmp, "_SUCCESS")) && hasDataFiles(tmp)
-        val live = new Path(m, tmp.getName.stripPrefix(".compact_tmp_"))
-        if (!complete) {
-          fs.delete(tmp, true) // partial write — live (if any) is the truth
-        } else if (!hasDataFiles(live)) {
-          fs.delete(live, true)
-          if (!fs.rename(tmp, live))
-            throw new java.io.IOException(s"compaction recovery failed: $tmp -> $live")
+      else fs.listStatus(parent).iterator.filter(_.isDirectory)
+        .map(st => StoreSwap.liveOf(st.getPath)).find { p =>
+          p.getName.startsWith(s"$colName=") &&
+            scala.util.Try(p.getName.stripPrefix(s"$colName=").trim.toInt)
+              .toOption.contains(value)
         }
-        // else: stale complete temp from a crash BEFORE the delete — the
-        // live partition is intact; the rewrite below clears the leftover.
-      }
-    }
 
     // Resolve the target partition dir strictly by name. NEVER fall back
     // to the scan's input files: Dataset.inputFiles is not partition-
@@ -235,28 +192,21 @@ object Warehouse {
     // unrelated partition. Absent or data-less target day ⇒ nothing to
     // compact (the emptiness check is scoped to this one directory, not
     // the warehouse-global file list).
-    val partDir = monthDir.flatMap(child(_, "day", day)) match {
-      case Some(d) if hasDataFiles(d) => d
+    val dayDir = child(new Path(path), "year", year)
+      .flatMap(child(_, "month", month)).flatMap(child(_, "day", day))
+    dayDir.foreach(d => StoreSwap.clearOrphan(spark, d.toString))
+    val partDir = dayDir match {
+      case Some(d) if StoreSwap.ready(spark, d.toString) => d
       case _ => return 0
     }
-    val tmpDir = new Path(partDir.getParent, s".compact_tmp_${partDir.getName}")
-    fs.delete(tmpDir, true) // stale leftover from a previous crash
     // Read the one partition directory directly — partition values live
     // in the directory name, not the files, and a leaf-dir read skips
     // the warehouse-global listing a basePath+filter read would do.
     val part = spark.read.parquet(partDir.toString)
     val bytes = part.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = ((bytes + targetFileBytes - 1) / targetFileBytes).toInt.max(1)
-    layout(part, nFiles)
-      .write.mode(SaveMode.Overwrite)
-      .parquet(tmpDir.toString)
-    // Guarantee the completeness marker recovery keys on, even under a
-    // committer configured with marksuccessfuljobs=false.
-    val marker = new Path(tmpDir, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-    fs.delete(partDir, true)
-    if (!fs.rename(tmpDir, partDir))
-      throw new java.io.IOException(s"compaction swap failed: $tmpDir -> $partDir")
+    StoreSwap.swap(spark, partDir.toString)(
+      layout(part, nFiles).write.mode(SaveMode.Overwrite).parquet(_))
     nFiles
   }
 

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.StoreSwap
+
 /**
  * Compaction for the ADDITIVE stamped-append sketch stores
  * ([[StreamingLogHistogram]], [[StreamingCountMin]]) — the store-side
@@ -22,9 +24,8 @@ import org.apache.spark.sql.functions._
  *    `(group..., key..., n)` rows (collapse replay copies first, then
  *    additive union with any prior base), remembering the highest
  *    batch id folded (the high-water mark);
- *  - swap the base in atomically (write-new → `_SUCCESS` marker →
- *    delete-old → rename — the [[StreamingHll]] store-swap pattern,
- *    with the same mid-swap crash recovery);
+ *  - swap the base in ([[graft.sources.StoreSwap]]; every read
+ *    recovers a swap that crashed midway);
  *  - only then delete exactly the snapshotted fact files. Appends that
  *    landed after the snapshot are untouched.
  *
@@ -33,8 +34,8 @@ import org.apache.spark.sql.functions._
  * the read-side `batch_id > hwm` filter (its counts already live in
  * the base); replays above the mark still collapse by the
  * (group, key, batch_id) fact identity as before. Every crash point
- * is safe: before the swap nothing changed; mid-swap the `_SUCCESS`-
- * gated rename recovers on the next read; after the swap but before
+ * is safe: before the swap nothing changed; mid-swap the next read
+ * recovers the staged base; after the swap but before
  * file deletion the leftover facts are ≤ hwm and filtered out, and
  * the next compaction deletes them.
  *
@@ -47,7 +48,7 @@ object SketchCompaction {
   private def fs(p: Path)(implicit spark: SparkSession): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def basePath(path: String) = new Path(path + ".base")
+  private def basePath(path: String) = path + ".base"
 
   /** Data part files currently in the fact dir (the appendable store).
    * Spark writes parts atomically (temp + rename), so every listed
@@ -61,46 +62,28 @@ object SketchCompaction {
       .map(_.getPath)
   }
 
-  /**
-   * The compacted base, if any: (folded counter rows, high-water
-   * batch id). Completes a half-finished swap first — a crash between
-   * delete(base) and rename(tmp, base) leaves the ONLY copy in the
-   * temp sibling; treating that as "no base" would resurrect the
-   * already-deleted fact rows as losses ([[StreamingHll.readStore]]'s
-   * recovery, verbatim semantics).
-   */
+  /** The compacted base, if any: (folded counter rows, high-water
+   * batch id). A swap that crashed midway is recovered first: treating
+   * its stage as "no base" would resurrect the already-deleted fact
+   * rows as losses. */
   private[streaming] def readBase(path: String)(
       implicit spark: SparkSession): Option[(DataFrame, Long)] = {
     val live = basePath(path)
-    val tmp = new Path(live.toString + ".tmp")
-    val f = fs(live)
-    if (!f.exists(live) && f.exists(tmp) && f.exists(new Path(tmp, "_SUCCESS"))) {
-      if (!f.rename(tmp, live))
-        throw new java.io.IOException(s"base swap recovery failed: $tmp -> $live")
-    }
-    if (!f.exists(live)) None
+    if (!StoreSwap.ready(spark, live)) None
     else {
-      val hwm = spark.read.parquet(new Path(live, "meta").toString)
-        .head().getLong(0)
-      Some((spark.read.parquet(new Path(live, "bins").toString), hwm))
+      val hwm = spark.read.parquet(s"$live/meta").head().getLong(0)
+      Some((spark.read.parquet(s"$live/bins"), hwm))
     }
   }
 
+  /** Swap in a base of `bins` folded up to batch `hwm`. */
   private[streaming] def writeBase(bins: DataFrame, hwm: Long, path: String)(
       implicit spark: SparkSession): Unit = {
-    val live = basePath(path)
-    val tmp = new Path(live.toString + ".tmp")
-    val f = fs(live)
-    f.delete(tmp, true)
-    bins.write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "bins").toString)
     import spark.implicits._
-    Seq(hwm).toDF("hwm").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(new Path(tmp, "meta").toString)
-    // completeness marker at the tmp ROOT — the recovery path keys on it
-    f.create(new Path(tmp, "_SUCCESS"), true).close()
-    f.delete(live, true)
-    if (!f.rename(tmp, live))
-      throw new java.io.IOException(s"base swap failed: $tmp -> $live")
+    StoreSwap.swap(spark, basePath(path)) { stage =>
+      bins.write.mode(SaveMode.Overwrite).parquet(s"$stage/bins")
+      Seq(hwm).toDF("hwm").coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$stage/meta")
+    }
   }
 
   /**

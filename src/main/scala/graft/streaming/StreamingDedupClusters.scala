@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.Dedup
+import graft.sources.StoreSwap
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -66,17 +67,14 @@ object StreamingDedupClusters {
   /** batch_id on compacted rows — below any live micro-batch id. */
   val PreHistoryBatchId: Long = -1L
 
-  /** A log as written, or the empty log when nothing was written yet.
-   * The path is checked first: reading a missing one makes Spark log a
-   * stack-traced WARN before it throws. A log directory with no data
-   * file (a failed first append) also reads as empty. */
+  /** A log as written, after finishing a [[compact]] that crashed
+   * mid-swap; the empty log when no data file was written yet (none,
+   * or a failed first append). Checking first also keeps Spark from
+   * logging a stack-traced WARN for a missing path. */
   private def readLog(spark: SparkSession, dir: String, schema: String): DataFrame = {
-    def empty = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+    if (StoreSwap.ready(spark, dir)) spark.read.parquet(dir)
+    else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType.fromDDL(schema))
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) empty
-    else try spark.read.parquet(dir)
-    catch { case _: org.apache.spark.sql.AnalysisException => empty }
   }
 
   private def bandsLog(spark: SparkSession, path: String): DataFrame =
@@ -242,54 +240,20 @@ object StreamingDedupClusters {
       .start()
 
   /** Fold each log into its minimal current form — latest label per
-   * doc, distinct band postings, one shingle set per doc — with the
-   * same write-then-swap + crash-recovery discipline as
-   * [[StreamingIvfIndex.compact]] (stage to a hidden `_SUCCESS`-marked
-   * temp sibling, then delete+rename; an interrupted swap is completed
-   * on entry, a marker-less temp is deleted, never promoted). QUIESCE:
-   * drain the stream for the duration — appends after the staging read
-   * would be dropped by the swap; checkpoint replay makes the stopped
-   * window lossless. */
+   * doc, distinct band postings, one shingle set per doc — each
+   * swapped in by [[StoreSwap]]. QUIESCE: drain the stream for the
+   * duration — appends after the staging read would be dropped by the
+   * swap; checkpoint replay makes the stopped window lossless. */
   def compact(spark: SparkSession, path: String): Unit = {
+    def swap(log: String, folded: DataFrame): Unit =
+      StoreSwap.swap(spark, s"$path/$log")(folded.write.mode(SaveMode.Overwrite).parquet(_))
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("batch_id").desc)
-    stageAndSwap(spark, s"$path/labels",
-      labelsLog(spark, path)
-        .withColumn("_rn", row_number().over(wDoc)).filter(col("_rn") === 1)
-        .select(col("doc_id"), col("comp"), lit(PreHistoryBatchId).as("batch_id")))
-    stageAndSwap(spark, s"$path/bands",
-      bandsLog(spark, path).select(col("band"), col("key"), col("doc_id")).distinct()
-        .withColumn("batch_id", lit(PreHistoryBatchId)))
-    stageAndSwap(spark, s"$path/sets",
-      setsLog(spark, path).dropDuplicates("doc_id")
-        .select(col("doc_id"), col("sh_set"), lit(PreHistoryBatchId).as("batch_id")))
-  }
-
-  private def stageAndSwap(spark: SparkSession, dir: String, folded: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(dir)
-    val tmp = new Path(live.getParent, s".compact_tmp_${live.getName}")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasDataFiles(d: Path): Boolean =
-      fs.exists(d) && fs.listStatus(d).exists { st =>
-        val nm = st.getPath.getName
-        if (st.isDirectory) !nm.startsWith("_") && !nm.startsWith(".") && hasDataFiles(st.getPath)
-        else st.getLen > 0 && !nm.startsWith("_") && !nm.startsWith(".")
-      }
-    if (fs.exists(tmp)) {
-      val complete = fs.exists(new Path(tmp, "_SUCCESS")) && hasDataFiles(tmp)
-      if (!complete) { fs.delete(tmp, true); () }
-      else if (!hasDataFiles(live)) {
-        fs.delete(live, true)
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(s"compaction recovery failed: $tmp -> $live")
-        return
-      } else { fs.delete(tmp, true); () }
-    }
-    folded.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val marker = new Path(tmp, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-    fs.delete(live, true)
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"compaction swap failed: $tmp -> $live")
+    swap("labels", labelsLog(spark, path)
+      .withColumn("_rn", row_number().over(wDoc)).filter(col("_rn") === 1)
+      .select(col("doc_id"), col("comp"), lit(PreHistoryBatchId).as("batch_id")))
+    swap("bands", bandsLog(spark, path).select(col("band"), col("key"), col("doc_id")).distinct()
+      .withColumn("batch_id", lit(PreHistoryBatchId)))
+    swap("sets", setsLog(spark, path).dropDuplicates("doc_id")
+      .select(col("doc_id"), col("sh_set"), lit(PreHistoryBatchId).as("batch_id")))
   }
 }

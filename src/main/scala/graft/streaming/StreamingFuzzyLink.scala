@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.FuzzyJoin
+import graft.sources.StoreSwap
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -108,43 +109,24 @@ object StreamingFuzzyLink {
     } finally { batchKeys.unpersist(); () }
   }
 
-  private def readStore(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
-    catch {
-      // ONLY the first-batch "store not created yet" case maps to an
-      // empty standing store. Any OTHER read failure must propagate:
-      // swallowing a transient FS error would serve an empty state,
-      // emit no cross-batch pairs, commit, and permanently break the
-      // stream-vs-batch parity contract with no error anywhere.
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getMessage).exists(m =>
-            m.contains("PATH_NOT_FOUND") || m.contains("Path does not exist") ||
-              m.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        // `path` missing but a compaction stage survives ⇒ compactStore
-        // crashed between its delete and rewrite of `path`. Recover the
-        // staged snapshot (a complete distinct-(k,s) image of the store
-        // at compaction time) instead of serving the empty store the
-        // missing path would otherwise map to — the exact silent
-        // parity break the comment above forbids. The recovery deletes
-        // the stage so a stale snapshot can never resurrect a store
-        // that was later deleted on purpose.
-        StagedStoreSwap.recover(spark, path).getOrElse {
-          import spark.implicits._
-          Seq.empty[(String, String, Long)].toDF("k", "s", "batch_id")
-        }
+  /** The standing store, after finishing a [[compactStore]] that
+   * crashed mid-swap; empty only when no data file was written yet.
+   * Any read failure of a store that has data propagates: serving it
+   * as empty would emit no cross-batch pairs, commit, and break the
+   * stream-vs-batch parity contract with no error anywhere. */
+  private def readStore(spark: SparkSession, path: String): DataFrame = {
+    if (StoreSwap.ready(spark, path)) spark.read.parquet(path)
+    else {
+      import spark.implicits._
+      Seq.empty[(String, String, Long)].toDF("k", "s", "batch_id")
     }
+  }
 
-  /** Rewrite the store distinct on (k, s) — stage-then-swap, the
-   * [[StreamingNearDedup.compactStore]] shape. SINGLE-WRITER
-   * maintenance op: run it with the stream stopped, or from the
-   * stream's own foreachBatch slot between batches — an append
-   * landing between this method's read and its overwrite of `path`
-   * would be lost (and with it the linkage of those keys).
-   *
-   * Crash safety: the staged snapshot is deleted only AFTER the swap
-   * into `path` completes, and [[readStore]] restores it whenever
-   * `path` is missing but the stage exists — a crash anywhere in the
-   * swap window can lose at most the rewrite, never the store.
+  /** Rewrite the store distinct on (k, s), swapped in by
+   * [[StoreSwap]]. SINGLE-WRITER maintenance op: run it with the
+   * stream stopped, or from the stream's own foreachBatch slot between
+   * batches — an append landing between this method's read and its
+   * swap would be lost (and with it the linkage of those keys).
    *
    * Re-stamping to [[PreHistoryBatchId]] also makes compaction the
    * REQUIRED step before re-attaching an existing store under a NEW
@@ -152,11 +134,10 @@ object StreamingFuzzyLink {
    * replay-exclusion filter (`batch_id =!= currentBatchId`) would hide
    * standing keys stamped with a reused live id. */
   def compactStore(spark: SparkSession, path: String): Unit = {
-    readStore(spark, path)
+    val compacted = readStore(spark, path)
       .select(col("k"), col("s")).distinct()
       .withColumn("batch_id", lit(PreHistoryBatchId))
-      .write.mode(SaveMode.Overwrite).parquet(StagedStoreSwap.stagedPath(path))
-    StagedStoreSwap.swapFromStaged(spark, path)
+    StoreSwap.swap(spark, path)(compacted.write.mode(SaveMode.Overwrite).parquet(_))
   }
 
   /** Attach to a streaming DataFrame: verified pairs land in
@@ -173,7 +154,7 @@ object StreamingFuzzyLink {
     // orphan sweep ONCE, before the query runs — no compaction can be
     // in flight here by construction, unlike the per-batch read where
     // the sweep raced a concurrent compactStore's just-written stage
-    StagedStoreSwap.clearOrphanedStage(stream.sparkSession, storePath)
+    StoreSwap.clearOrphan(stream.sparkSession, storePath)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

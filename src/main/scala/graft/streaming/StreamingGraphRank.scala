@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraphRank
+import graft.sources.StoreSwap
 
 /**
  * Streaming face of the exact-integer PageRank curation signal
@@ -26,8 +27,8 @@ import graft.functions.GraphRank
  *    refresh-periodic: [[rerank]] recomputes
  *    [[GraphRank.pageRankMicro]] over the current distinct edge set
  *    (integer arithmetic, bit-identical to the batch path by
- *    construction) and swaps the result in atomically with the
- *    `_SUCCESS`-gated [[StreamingHll.swapStore]] pattern, stamped
+ *    construction) and swaps the result in with
+ *    [[graft.sources.StoreSwap]], stamped
  *    with the edge-batch high-water mark it covers, so a reader
  *    always sees a complete rank vector and KNOWS its freshness.
  *    `attach(rerankEvery = n)` runs the refresh in-line every n
@@ -83,7 +84,7 @@ object StreamingGraphRank {
     val ranks = GraphRank.pageRankMicro(edges(dir), "src", "dst", iterations)
       .withColumn("as_of_batch", lit(asOf))
       .localCheckpoint(true) // cut lineage off the store being replaced
-    StreamingHll.swapStore(ranks, ranksPath(dir))
+    StoreSwap.swap(spark, ranksPath(dir))(ranks.write.mode(SaveMode.Overwrite).parquet(_))
   }
 
   /** The served rank vector (mid-swap crashes recovered), None before

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Hll
+import graft.sources.StoreSwap
 
 /**
  * Streaming face of the mergeable HLL sketch store
@@ -26,8 +27,8 @@ import graft.functions.Hll
  *    (`Hll.stats`, the o10 rollup) is oblivious to which path built
  *    the store.
  *
- * The store swap is write-new → atomic rename, the
- * [[graft.sources.UiReferenceStore]] pattern.
+ * Each batch replaces the store through [[graft.sources.StoreSwap]],
+ * and every read recovers a swap that crashed midway.
  */
 object StreamingHll {
 
@@ -48,48 +49,16 @@ object StreamingHll {
     }
   }
 
-  /**
-   * Read the current store, completing a half-finished swap first: a
-   * crash between delete(path) and rename(tmp, path) leaves the ONLY
-   * copy of the store in the hidden temp sibling — treating that as
-   * "no store yet" would silently reset every sketch (the same
-   * mid-swap crash state [[graft.sources.Warehouse.compactPartition]]
-   * recovers). Returns None only when neither location exists.
-   */
+  /** The current store (a crashed swap recovered first), None before
+   * the first batch; shared by the HLL, KMV and rank stores. */
   private[streaming] def readStore(path: String)(
       implicit spark: SparkSession): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    if (!fs.exists(live) && fs.exists(tmp) &&
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))) {
-      if (!fs.rename(tmp, live))
-        throw new java.io.IOException(s"sketch store swap recovery failed: $tmp -> $path")
-    }
-    if (fs.exists(live)) Some(spark.read.parquet(path).localCheckpoint(true))
+    if (StoreSwap.ready(spark, path)) Some(spark.read.parquet(path).localCheckpoint(true))
     else None
   }
 
-  /** The swap itself: write-new → delete-old → rename; shared by the
-   * HLL and KMV stores. */
-  private[streaming] def swapStore(next: DataFrame, path: String)(
-      implicit spark: SparkSession): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    next.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    // guarantee the completeness marker the recovery path keys on
-    val marker = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(path)))
-      throw new java.io.IOException(s"sketch store swap failed: $tmp -> $path")
-  }
-
   /** Attach to a stream: per micro-batch, fold into the parquet store
-   * at `path` (atomic swap via temp dir + rename; mid-swap crashes
-   * recover on the next batch's read). */
+   * at `path` and swap it in. */
   def attach(stream: DataFrame, groupCols: Seq[String], valueCol: String,
       path: String, checkpoint: String)(implicit spark: SparkSession)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -98,7 +67,7 @@ object StreamingHll {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val next = mergeBatch(readStore(path), batch, groupCols, valueCol)
           .localCheckpoint(true) // cut lineage off the files we replace
-        swapStore(next, path)
+        StoreSwap.swap(spark, path)(next.write.mode(SaveMode.Overwrite).parquet(_))
         ()
       }
       .start()

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.Similarity
+import graft.sources.StoreSwap
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,7 +37,12 @@ import org.apache.spark.sql.functions._
  * cell (≤ nClusters files per batch); serving scans nProbe/nClusters
  * of the corpus via partition pruning exactly as the batch index
  * does. [[compact]] folds accumulated per-batch files back into one
- * clean copy per cell with the write-then-swap discipline.
+ * clean copy per cell.
+ *
+ * The index directory `path` (centroids + corpus) is the one
+ * [[graft.sources.StoreSwap]] unit of both [[compact]] and [[reindex]],
+ * so a reader never mixes old centroids with a new corpus, and every
+ * read recovers a swap that crashed midway.
  */
 object StreamingIvfIndex {
 
@@ -81,7 +87,7 @@ object StreamingIvfIndex {
    * index must be [[bootstrap]]ped first. */
   def attach(stream: DataFrame, path: String,
       checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val centroids = Similarity.loadIvfCentroids(stream.sparkSession, path)
+    val centroids = loadCentroids(stream.sparkSession, path)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -97,6 +103,7 @@ object StreamingIvfIndex {
    * collapse window — safe because duplicates share their cell. */
   def servingCorpus(spark: SparkSession, path: String,
       cells: Option[Seq[Int]] = None): DataFrame = {
+    require(StoreSwap.ready(spark, path), s"no IVF index at $path")
     val raw = spark.read.parquet(s"$path/corpus")
     val pruned = cells.map(cs => raw.filter(col("cell").isin(cs: _*))).getOrElse(raw)
     val w = Window.partitionBy(col("cell"), col("vec_id"))
@@ -106,11 +113,17 @@ object StreamingIvfIndex {
       .select(col("vec_id"), col("embedding"), col("cell"))
   }
 
+  /** The fitted centroids, a crashed swap recovered first. */
+  private def loadCentroids(spark: SparkSession, path: String): Seq[(Int, Seq[Float])] = {
+    require(StoreSwap.ready(spark, path), s"no IVF index at $path")
+    Similarity.loadIvfCentroids(spark, path)
+  }
+
   /** Probe-pruned top-k over the live index — identical semantics to
    * [[Similarity.ivfTopKIndexed]], over bootstrap AND streamed rows. */
   def topKIndexed(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
-    val centroids = Similarity.loadIvfCentroids(spark, path)
+    val centroids = loadCentroids(spark, path)
     val qcells = Similarity.probeCells(queries, centroids, nProbe)
     val probedCells = qcells.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
@@ -118,25 +131,6 @@ object StreamingIvfIndex {
       servingCorpus(spark, path, Some(probedCells)), qcells, k)
   }
 
-  /** Fold accumulated per-batch appends (and replay duplicates) into
-   * one clean copy, with the same write-then-swap + crash-recovery
-   * discipline as [[graft.sources.Warehouse.compactPartition]]: the
-   * collapsed corpus is fully written to a hidden temp sibling
-   * (stamped with a job-commit `_SUCCESS` marker this method
-   * guarantees), and only then is the live dir replaced by a rename —
-   * so the overwrite never recomputes lineage from files it is itself
-   * deleting, a task retry never sees a half-replaced live dir, and a
-   * crash between the delete and the rename leaves the data durable
-   * in the temp. On entry an interrupted swap is completed (complete
-   * temp + data-less live dir → rename back); a marker-less temp is a
-   * mid-write leftover and is deleted, never promoted. The temp is
-   * removed on success — nothing lingers between compactions.
-   *
-   * QUIESCE REQUIREMENT: detach or drain the stream (no concurrent
-   * [[processBatch]]) for the duration of the call — rows appended to
-   * the live dir after the staging read would be dropped by the swap.
-   * The checkpoint makes the stopped window lossless: on re-attach
-   * the source replays from the last committed offset. */
   /** Per-cell row counts of the serving corpus — the e9 census turned
    * into an index-maintenance signal. O(nClusters) rows. */
   def cellCensus(spark: SparkSession, path: String): DataFrame =
@@ -163,17 +157,7 @@ object StreamingIvfIndex {
    * deterministic md5-keyed sample instead, cutting the
    * iterations × corpus-scan refit bill by 1/frac while assignment
    * and cell count still cover the full corpus), reassign every
-   * vector, stage the
-   * complete new index (centroids + corpus TOGETHER — a reader mixing
-   * old centroids with a new corpus would probe the wrong cells) under
-   * a hidden temp sibling with a `_SUCCESS` marker, then swap. Entry
-   * recovery mirrors [[compact]] but is PER COMPONENT: a
-   * marker-complete temp alongside a gutted live index is a mid-swap
-   * crash — each component still staged under the temp is promoted,
-   * while a component already renamed live (its temp counterpart gone)
-   * is kept; a marker-less temp is a mid-write leftover and is
-   * deleted. After recovery the call proceeds to the requested refit —
-   * finishing the previous swap does not re-cluster the corpus.
+   * vector, and swap the new index in.
    *
    * QUIESCE REQUIREMENT: same as [[compact]] — detach or drain the
    * stream for the duration; the checkpoint replays the stopped
@@ -183,45 +167,7 @@ object StreamingIvfIndex {
       fitSampleFrac: Double = 1.0): Unit = {
     require(fitSampleFrac > 0 && fitSampleFrac <= 1.0,
       s"fitSampleFrac must be in (0, 1], got $fitSampleFrac")
-    import org.apache.hadoop.fs.Path
     import spark.implicits._
-    val tmp = new Path(s"$path/.reindex_tmp")
-    val liveCentroids = new Path(s"$path/centroids")
-    val liveCorpus = new Path(s"$path/corpus")
-    val fs = tmp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    if (fs.exists(tmp)) {
-      val complete = fs.exists(new Path(tmp, "_SUCCESS"))
-      if (complete && (!fs.exists(liveCentroids) || !fs.exists(liveCorpus))) {
-        // Mid-swap crash: promote PER COMPONENT. The swap deletes both
-        // live dirs before renaming either, so a crash can leave a
-        // component already renamed into place (its tmp counterpart
-        // gone) while the other is still staged. A live dir whose tmp
-        // counterpart is missing was already promoted and MUST be kept
-        // — deleting it unconditionally would destroy the only
-        // remaining copy and then fail the rename of the absent tmp
-        // counterpart, wedging the index with that component nowhere.
-        def promote(sub: String, live: Path): Unit = {
-          val staged = new Path(tmp, sub)
-          if (fs.exists(staged)) {
-            fs.delete(live, true)
-            if (!fs.rename(staged, live))
-              throw new java.io.IOException(
-                s"reindex recovery failed for $sub under $path")
-          }
-        }
-        promote("centroids", liveCentroids)
-        promote("corpus", liveCorpus)
-        fs.delete(tmp, true)
-        // FALL THROUGH to the refit: the promotion only completes the
-        // PREVIOUS reindex's swap — the caller asked for a fresh
-        // re-cluster of the current corpus (the skew that triggered
-        // this call is unaddressed by the recovery alone).
-      } else {
-        fs.delete(tmp, true) // mid-write leftover or stale stage
-      }
-    }
-
     // materialize the corpus off the files the swap will delete
     val corpus = servingCorpus(spark, path).localCheckpoint(true)
     // The refit is iterations × one pass over the FIT corpus — the
@@ -245,27 +191,13 @@ object StreamingIvfIndex {
     val fitCorpus =
       if ((fitSampleFrac < 1.0) && sampled.count() < k) corpus else sampled
     val centroids = Similarity.fitIvfCentroids(fitCorpus, k)
-    centroids.toDF("cell", "center")
-      .write.mode(SaveMode.Overwrite).parquet(s"$tmp/centroids")
-    Similarity.assignCells(corpus.select(col("vec_id"), col("embedding")), centroids)
-      .withColumn("batch_id", lit(PreHistoryBatchId))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$tmp/corpus")
-    val marker = new Path(tmp, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-    // Swap ordering invariant (the recovery above depends on it):
-    // delete BOTH live dirs before renaming either. Then at every
-    // crash point at least one live dir is missing while the marker
-    // exists — so the recovery trigger fires — and each component is
-    // either still staged under tmp (promote) or already live (keep).
-    // Interleaving delete/rename per component would instead allow a
-    // crash state with both live dirs present but mixed generations,
-    // which the trigger cannot distinguish from a clean index.
-    fs.delete(liveCentroids, true)
-    fs.delete(liveCorpus, true)
-    if (!fs.rename(new Path(tmp, "centroids"), liveCentroids) ||
-        !fs.rename(new Path(tmp, "corpus"), liveCorpus))
-      throw new java.io.IOException(s"reindex swap failed under $path")
-    fs.delete(tmp, true)
+    StoreSwap.swap(spark, path) { stage =>
+      centroids.toDF("cell", "center")
+        .write.mode(SaveMode.Overwrite).parquet(s"$stage/centroids")
+      Similarity.assignCells(corpus.select(col("vec_id"), col("embedding")), centroids)
+        .withColumn("batch_id", lit(PreHistoryBatchId))
+        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$stage/corpus")
+    }
   }
 
   /** The drift trigger: re-cluster iff [[skewRatio]] exceeds
@@ -277,39 +209,22 @@ object StreamingIvfIndex {
     else false
   }
 
+  /** Fold accumulated per-batch appends (and replay duplicates) into
+   * one clean copy per cell, swapped in with the centroids as one
+   * index.
+   *
+   * QUIESCE REQUIREMENT: detach or drain the stream (no concurrent
+   * [[processBatch]]) for the duration of the call — rows appended to
+   * the live dir after the staging read would be dropped by the swap.
+   * The checkpoint makes the stopped window lossless: on re-attach
+   * the source replays from the last committed offset. */
   def compact(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(s"$path/corpus")
-    val tmp = new Path(s"$path/.compact_tmp_corpus")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hasDataFiles(dir: Path): Boolean =
-      fs.exists(dir) && fs.listStatus(dir).exists { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) !n.startsWith("_") && !n.startsWith(".") && hasDataFiles(st.getPath)
-        else st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-      }
-
-    if (fs.exists(tmp)) {
-      val complete = fs.exists(new Path(tmp, "_SUCCESS")) && hasDataFiles(tmp)
-      if (!complete) {
-        fs.delete(tmp, true) // partial stage — live (if any) is the truth
-      } else if (!hasDataFiles(live)) {
-        fs.delete(live, true) // crashed mid-swap: complete the rename
-        if (!fs.rename(tmp, live))
-          throw new java.io.IOException(s"compaction recovery failed: $tmp -> $live")
-        return // the recovered corpus IS the compacted one
-      } else {
-        fs.delete(tmp, true) // stale complete stage; restage fresh below
-      }
+    val corpus = servingCorpus(spark, path)
+    StoreSwap.swap(spark, path) { stage =>
+      spark.read.parquet(s"$path/centroids")
+        .write.mode(SaveMode.Overwrite).parquet(s"$stage/centroids")
+      corpus.withColumn("batch_id", lit(PreHistoryBatchId))
+        .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(s"$stage/corpus")
     }
-
-    servingCorpus(spark, path)
-      .withColumn("batch_id", lit(PreHistoryBatchId))
-      .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmp.toString)
-    val marker = new Path(tmp, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, true).close()
-    fs.delete(live, true)
-    if (!fs.rename(tmp, live))
-      throw new java.io.IOException(s"compaction swap failed: $tmp -> $live")
   }
 }

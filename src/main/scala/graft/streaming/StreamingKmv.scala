@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Kmv
+import graft.sources.StoreSwap
 
 /**
  * Streaming face of the KMV/theta distinct sketch
@@ -32,10 +33,7 @@ object StreamingKmv {
   }
 
   /** Attach to a stream: per micro-batch, fold into the parquet store
-   * at `path` — shares [[StreamingHll.readStore]]/[[StreamingHll.swapStore]],
-   * including the mid-swap crash recovery (a crash between delete and
-   * rename leaves the only copy in the temp sibling; the next batch's
-   * read completes the swap instead of resetting the store). */
+   * at `path` and swap it in, as [[StreamingHll.attach]] does. */
   def attach(stream: DataFrame, groupCols: Seq[String], valueCol: String,
       k: Int, path: String, checkpoint: String)(implicit spark: SparkSession)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -44,7 +42,7 @@ object StreamingKmv {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val next = mergeBatch(StreamingHll.readStore(path), batch,
           groupCols, valueCol, k).localCheckpoint(true)
-        StreamingHll.swapStore(next, path)
+        StoreSwap.swap(spark, path)(next.write.mode(SaveMode.Overwrite).parquet(_))
         ()
       }
       .start()

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.Dedup
+import graft.sources.StoreSwap
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -100,44 +101,36 @@ object StreamingNearDedup {
    * batch ids are non-negative, so it never matches a live batch. */
   val PreHistoryBatchId: Long = -1L
 
-  private def readStore(spark: SparkSession, path: String): DataFrame =
-    try {
+  /** The store, after finishing a [[compactStore]] that crashed
+   * mid-swap; empty only when no data file was written yet. Any read
+   * failure of a store that has data propagates: serving it as empty
+   * would re-admit every standing near-duplicate and commit — a
+   * silent, permanent dedup break. */
+  private def readStore(spark: SparkSession, path: String): DataFrame = {
+    if (StoreSwap.ready(spark, path)) {
       // mergeSchema: tolerate stores written before the batch_id stamp
       val df = spark.read.option("mergeSchema", "true").parquet(path)
       if (df.columns.contains("batch_id")) df
       else df.withColumn("batch_id", lit(PreHistoryBatchId))
-    } catch {
-      // ONLY the "store not created yet" case maps to an empty store
-      // (after checking for a crashed compaction swap to recover —
-      // the StreamingFuzzyLink discipline). Any other read failure
-      // propagates: swallowing a transient FS error would serve empty
-      // state, re-admit every standing near-duplicate, and commit —
-      // a silent, permanent dedup break.
-      case e: org.apache.spark.sql.AnalysisException
-          if Option(e.getMessage).exists(m =>
-            m.contains("PATH_NOT_FOUND") || m.contains("Path does not exist") ||
-              m.contains("UNABLE_TO_INFER_SCHEMA")) =>
-        StagedStoreSwap.recover(spark, path).getOrElse {
-          import spark.implicits._
-          Seq.empty[(Int, String, java.sql.Timestamp, Long)]
-            .toDF("band", "key", "ts", "batch_id")
-        }
+    } else {
+      import spark.implicits._
+      Seq.empty[(Int, String, java.sql.Timestamp, Long)]
+        .toDF("band", "key", "ts", "batch_id")
     }
+  }
 
   /** Rewrite the store keeping only keys seen since `cutoff` (run
    * periodically; read-time filtering keeps correctness in between —
-   * same TTL-as-predicate + compaction shape as RealTimeStore).
-   * Distributed stage-then-swap: survivors land in `<path>-staged`
-   * (Spark cannot overwrite a path it is reading), then replace the
-   * live store. */
+   * same TTL-as-predicate + compaction shape as RealTimeStore),
+   * swapped in by [[StoreSwap]]. SINGLE-WRITER, as
+   * [[StreamingFuzzyLink.compactStore]]. */
   def compactStore(spark: SparkSession, path: String,
       cutoff: java.sql.Timestamp): Unit = {
-    readStore(spark, path)
+    val survivors = readStore(spark, path)
       .groupBy(col("band"), col("key")).agg(max(col("ts")).as("ts"))
       .filter(col("ts") >= cutoff)
       .withColumn("batch_id", lit(PreHistoryBatchId))
-      .write.mode(SaveMode.Overwrite).parquet(StagedStoreSwap.stagedPath(path))
-    StagedStoreSwap.swapFromStaged(spark, path)
+    StoreSwap.swap(spark, path)(survivors.write.mode(SaveMode.Overwrite).parquet(_))
   }
 
   /** Attach to a streaming DataFrame: kept rows land in `outPath`. */
@@ -145,9 +138,8 @@ object StreamingNearDedup {
       storePath: String, outPath: String, checkpoint: String,
       horizonSec: Long): org.apache.spark.sql.streaming.StreamingQuery = {
     // orphan sweep ONCE at stream start, not per batch read — the
-    // per-read sweep raced a concurrently running compactStore (see
-    // StagedStoreSwap.clearOrphanedStage)
-    StagedStoreSwap.clearOrphanedStage(stream.sparkSession, storePath)
+    // per-read sweep raced a concurrently running compactStore
+    StoreSwap.clearOrphan(stream.sparkSession, storePath)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
  *    operator). Both stores reuse [[SketchCompaction]]: replays of a
  *    batch collapse by fact identity + batch id, replays below the
  *    compaction high-water mark are excluded, and [[compact]] folds
- *    history into a `_SUCCESS`-gated base so the store's file count
+ *    history into a swapped base so the store's file count
  *    is bounded by fold cadence, not stream age. The postings
  *    themselves grow with the corpus — that is the index's job — but
  *    never with replay count or batch count.

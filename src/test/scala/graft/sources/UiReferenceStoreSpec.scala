@@ -164,6 +164,35 @@ class UiReferenceStoreSpec extends SparkTestBase {
     assert(UiReferenceStore.asInitialState(spark, path).collect().toSet == Set(("m1", "UP"), ("m2", "DOWN")))
   }
 
+  test("a rewrite that crashed between its delete and its rename loses no machine") {
+    val path = Files.createTempDirectory("graft-uiref-midswap").toString + "/state"
+    val fleet = Seq("m1", "m2", "m3")
+    UiReferenceStore.ensureMachines(spark, path, fleet.toDF("machineId"), nowEpochS = 10)
+    UiReferenceStore.merge(spark, path,
+      Seq(StatusUpdate("m1", "UP", 20), StatusUpdate("m2", "DOWN", 30)).toDS())
+    UiReferenceStore.upsertName(spark, path, "m1", "Press 1")
+    def state() = UiReferenceStore.read(spark, path)
+      .as[(String, String, Option[String], Option[String], Long)].collect().toSet
+    val before = state()
+    assert(before.map(_._1) == fleet.toSet)
+    // the crash state: live state deleted, the complete new image still
+    // in the stage the next rename would have promoted
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stage = new org.apache.hadoop.fs.Path(StoreSwap.stage(path))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(path), stage))
+    val marker = new org.apache.hadoop.fs.Path(stage, "_SUCCESS")
+    if (!fs.exists(marker)) fs.create(marker, true).close()
+    // read serves the whole fleet, names and statuses included
+    assert(state() == before, "a crashed swap read as a smaller fleet")
+    assert(!fs.exists(stage))
+    // so the next batch registers nobody and its merge keeps everyone
+    assert(UiReferenceStore.ensureMachines(spark, path, fleet.toDF("machineId"), 40).isEmpty)
+    UiReferenceStore.merge(spark, path, Seq(StatusUpdate("m3", "UP", 50)).toDS())
+    assert(state() == before.filter(_._1 != "m3") +
+      (("m3", "MACHINE", None, Some("UP"), 50L)))
+  }
+
   test("read starts no Spark job (fixed schema, no inference)") {
     val path = Files.createTempDirectory("graft-uiref-nojob").toString + "/state"
     UiReferenceStore.merge(spark, path, Seq(StatusUpdate("m1", "UP", 1)).toDS())

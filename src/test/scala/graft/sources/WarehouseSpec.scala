@@ -107,7 +107,7 @@ class WarehouseSpec extends SparkTestBase {
     val fs = new org.apache.hadoop.fs.Path(s"$tmp/wh")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new org.apache.hadoop.fs.Path(s"$tmp/wh/year=2021/month=3/day=5")
-    val orphan = new org.apache.hadoop.fs.Path(s"$tmp/wh/year=2021/month=3/.compact_tmp_day=5")
+    val orphan = new org.apache.hadoop.fs.Path(StoreSwap.stage(s"$tmp/wh/year=2021/month=3/day=5"))
     assert(fs.rename(live, orphan)) // the mid-swap crash state
     assert(!fs.exists(live)) // scans can't see the hidden orphan
     assert(Warehouse.compactPartition(spark, s"$tmp/wh", 2021, 3, 5) == 1)
@@ -189,7 +189,7 @@ class WarehouseSpec extends SparkTestBase {
       .write.partitionBy("year", "month", "day").parquet(s"$tmp/wh")
     val fs = new org.apache.hadoop.fs.Path(s"$tmp/wh")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val orphan = new org.apache.hadoop.fs.Path(s"$tmp/wh/year=2021/month=3/.compact_tmp_day=5")
+    val orphan = new org.apache.hadoop.fs.Path(StoreSwap.stage(s"$tmp/wh/year=2021/month=3/day=5"))
 
     // Mid-write temp (data file but no _SUCCESS) while the live dir is
     // intact: the temp is garbage — compaction must discard it and

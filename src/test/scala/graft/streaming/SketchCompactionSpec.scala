@@ -96,10 +96,11 @@ class SketchCompactionSpec extends SparkTestBase {
     // simulate the crash window: base deleted, completed tmp not yet
     // renamed — the ONLY copy of the store lives in the temp sibling
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(s"$dir.base"), new Path(s"$dir.base.tmp")))
-    assert(fs.exists(new Path(s"$dir.base.tmp/_SUCCESS")))
+    val stage = graft.sources.StoreSwap.stage(s"$dir.base")
+    assert(fs.rename(new Path(s"$dir.base"), new Path(stage)))
+    assert(fs.exists(new Path(s"$stage/_SUCCESS")))
     assert(readAt(dir) === before, "read must recover the mid-swap store")
-    assert(fs.exists(new Path(s"$dir.base")) && !fs.exists(new Path(s"$dir.base.tmp")))
+    assert(fs.exists(new Path(s"$dir.base")) && !fs.exists(new Path(stage)))
     // an INCOMPLETE tmp (no _SUCCESS) must NOT be resurrected: with a
     // live base present it is simply dead weight from a failed write
     StreamingLogHistogram.compact(dir, Seq("g")) // no-op fold (no facts) is fine

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.functions.Dedup
+import graft.sources.StoreSwap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.trees.TreeNode
 import org.apache.spark.sql.execution.QueryExecution
@@ -129,20 +130,26 @@ class StreamingDedupClustersSpec extends SparkTestBase {
       .filter(col("count") > 1).isEmpty, "sets log kept duplicate docs")
 
     // crash state: live labels dir renamed away mid-swap, complete
-    // temp sibling holds the data — recovery must restore losslessly
+    // stage holds the data — recovery must restore losslessly
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val live = new org.apache.hadoop.fs.Path(s"$path/labels")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.compact_tmp_labels")
-    assert(fs.rename(live, tmp))
-    val marker = new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")
+    val stage = new org.apache.hadoop.fs.Path(StoreSwap.stage(s"$path/labels"))
+    assert(fs.rename(live, stage))
+    val marker = new org.apache.hadoop.fs.Path(stage, "_SUCCESS")
     if (!fs.exists(marker)) fs.create(marker, true).close()
+    // a batch runs before the recovering compact: it must read the
+    // staged labels, not an empty log beside a fresh `labels/` dir
+    run(path, 2L, Seq("a4" -> text(0, 20)))
+    val withA4 = before + ("a4" -> "a1")
+    assert(labelsOf(path) == withA4, "a batch after a mid-swap crash lost standing labels")
     StreamingDedupClusters.compact(spark, path)
-    assert(labelsOf(path) == before, "mid-swap crash recovery lost labels")
+    assert(labelsOf(path) == withA4, "mid-swap crash recovery lost labels")
+    assert(!fs.exists(stage))
 
     // a further batch over the compacted store still merges correctly
-    run(path, 2L, Seq("a4" -> text(0, 20)))
-    assert(labelsOf(path)("a4") == "a1")
+    run(path, 3L, Seq("a5" -> text(0, 20)))
+    assert(labelsOf(path) == withA4 + ("a5" -> "a1"))
   }
 
   test("end-to-end over a real stream via foreachBatch") {

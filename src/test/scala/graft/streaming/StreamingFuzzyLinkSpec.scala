@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.functions.FuzzyJoin
+import graft.sources.StoreSwap
 import org.apache.spark.sql.functions._
 
 class StreamingFuzzyLinkSpec extends SparkTestBase {
@@ -115,7 +116,7 @@ class StreamingFuzzyLinkSpec extends SparkTestBase {
     val store = tmp()
     run(store, Seq(batch1 -> 0L, batch2 -> 1L))
     StreamingFuzzyLink.compactStore(spark, store)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$store-staged")),
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(StoreSwap.stage(store))),
       "staged snapshot must not outlive a completed compaction")
   }
 
@@ -129,7 +130,7 @@ class StreamingFuzzyLinkSpec extends SparkTestBase {
     spark.read.parquet(store)
       .select(col("k"), col("s")).distinct()
       .withColumn("batch_id", lit(StreamingFuzzyLink.PreHistoryBatchId))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$store-staged")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(StoreSwap.stage(store))
     val p = new org.apache.hadoop.fs.Path(store)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     // next batch must still see the standing keys — a missing store
@@ -140,28 +141,28 @@ class StreamingFuzzyLinkSpec extends SparkTestBase {
     // with the stage consumed (a stale snapshot left behind would
     // resurrect old state if the store were later deleted on purpose)
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(store)))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$store-staged")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(StoreSwap.stage(store))))
   }
 
   test("a stage orphaned BEFORE the swap is cleared by the start-time sweep, not by batch reads") {
     val store = tmp()
     run(store, Seq(batch1 -> 0L, batch2 -> 1L))
     // simulate the OTHER crash window: compaction wrote its staged
-    // snapshot, then died before swapFromStaged ever touched the live
+    // snapshot, then died before the swap ever touched the live
     // path — store intact, stage orphaned
     spark.read.parquet(store)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$store-staged")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(StoreSwap.stage(store))
     // a batch read must NOT consume the stage: the per-read sweep is
     // what raced a concurrently running compaction (it deleted the
     // stage compactStore had just written, and the swap then failed
     // reading the deleted path)
     run(store, Seq(batch3 -> 2L))
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$store-staged")),
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(StoreSwap.stage(store))),
       "batch reads must leave the stage alone — a compaction may own it")
     // the START-TIME sweep (what attach() runs before the query) is
     // where no compaction can be in flight; it consumes the orphan
-    StagedStoreSwap.clearOrphanedStage(spark, store)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$store-staged")),
+    StoreSwap.clearOrphan(spark, store)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(StoreSwap.stage(store))),
       "an orphaned stage must not survive the stream-start sweep")
     // and an intentional reset (delete the live store to start fresh)
     // now yields a genuinely FRESH store — not a resurrected snapshot
@@ -177,13 +178,13 @@ class StreamingFuzzyLinkSpec extends SparkTestBase {
     spark.read.parquet(store)
       .select(col("k"), col("s")).distinct()
       .withColumn("batch_id", lit(StreamingFuzzyLink.PreHistoryBatchId))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$store-staged")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(StoreSwap.stage(store))
     val p = new org.apache.hadoop.fs.Path(store)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     // live path missing + stage present = crashed swap, the stage is
     // the ONLY complete image — the sweep must not touch it
-    StagedStoreSwap.clearOrphanedStage(spark, store)
-    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$store-staged")),
+    StoreSwap.clearOrphan(spark, store)
+    assert(java.nio.file.Files.exists(java.nio.file.Paths.get(StoreSwap.stage(store))),
       "sweep must keep the stage when the live path cannot be read")
     // ...so the next batch still recovers the standing keys through it
     val Seq(e) = run(store, Seq(Seq("abcf") -> 2L))

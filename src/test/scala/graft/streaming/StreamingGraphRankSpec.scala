@@ -79,7 +79,7 @@ class StreamingGraphRankSpec extends SparkTestBase {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/ranks"),
-      new org.apache.hadoop.fs.Path(s"$dir/ranks.tmp")))
+      new org.apache.hadoop.fs.Path(graft.sources.StoreSwap.stage(s"$dir/ranks"))))
     assert(servedRanks(dir) === before, "read must recover the mid-swap rank store")
   }
 

@@ -48,16 +48,16 @@ class StreamingHllSpec extends SparkTestBase {
     implicit val s = spark
     val dir = java.nio.file.Files.createTempDirectory("graft-hll-crash").toString
     val path = s"$dir/store"
-    StreamingHll.swapStore(
-      StreamingHll.mergeBatch(None, rows.toDF("g", "v"), Seq("g"), "v"), path)
+    val first = StreamingHll.mergeBatch(None, rows.toDF("g", "v"), Seq("g"), "v")
+    graft.sources.StoreSwap.swap(spark, path)(first.write.parquet(_))
     val before = StreamingHll.readStore(path).get
       .as[(String, Array[Byte])].collect().map { case (g, sk) => g -> sk.toSeq }.toMap
     // simulate dying between delete(path) and rename(tmp, path): the
     // ONLY copy of the store lives in the hidden temp sibling
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(path),
-      new org.apache.hadoop.fs.Path(path + ".tmp")))
+    val stage = new org.apache.hadoop.fs.Path(graft.sources.StoreSwap.stage(path))
+    assert(fs.rename(new org.apache.hadoop.fs.Path(path), stage))
     // before the recovery path this read returned None and the next
     // batch silently RESET every sketch
     val recovered = StreamingHll.readStore(path)
@@ -65,7 +65,7 @@ class StreamingHllSpec extends SparkTestBase {
     val after = recovered.get.as[(String, Array[Byte])].collect()
       .map { case (g, sk) => g -> sk.toSeq }.toMap
     assert(after === before)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(path + ".tmp")), "swap completed")
+    assert(!fs.exists(stage), "swap completed")
   }
 
   test("attach: e2e store over micro-batches; estimates read like the batch path") {

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkTestBase
 import graft.functions.Similarity
+import graft.sources.StoreSwap
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -70,11 +71,11 @@ class StreamingIvfIndexSpec extends SparkTestBase {
     StreamingIvfIndex.compact(spark, path)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(s"$path/corpus")
-    val tmp = new org.apache.hadoop.fs.Path(s"$path/.compact_tmp_corpus")
+    val live = new org.apache.hadoop.fs.Path(path)
+    val tmp = new org.apache.hadoop.fs.Path(StoreSwap.stage(path))
     assert(!fs.exists(tmp), "temp stage must be cleaned up on success")
 
-    // crash between delete(live) and rename: the corpus survives ONLY
+    // crash between delete(live) and rename: the index survives ONLY
     // in the complete hidden stage. A re-run must finish the swap.
     assert(fs.rename(live, tmp))
     assert(!fs.exists(live))
@@ -86,7 +87,7 @@ class StreamingIvfIndexSpec extends SparkTestBase {
     // a marker-less (mid-write) stage is garbage: discarded, and the
     // intact live corpus recompacted from itself
     fs.mkdirs(tmp)
-    val junk = fs.create(new org.apache.hadoop.fs.Path(tmp, "cell=0/part-junk.parquet"), true)
+    val junk = fs.create(new org.apache.hadoop.fs.Path(tmp, "corpus/cell=0/part-junk.parquet"), true)
     junk.write("not parquet".getBytes("UTF-8")); junk.close()
     StreamingIvfIndex.compact(spark, path)
     assert(!fs.exists(tmp))
@@ -228,44 +229,15 @@ class StreamingIvfIndexSpec extends SparkTestBase {
     // to the recovered corpus' file layout) without losing any vector
     val served = StreamingIvfIndex.servingCorpus(spark, path)
       .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSet
-    // simulate the crash window: staged temp complete, live dirs gone
+    // simulate the crash window: staged index complete, live index gone
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$path/.reindex_tmp"))
-    assert(fs.rename(new Path(s"$path/centroids"), new Path(s"$path/.reindex_tmp/centroids")))
-    assert(fs.rename(new Path(s"$path/corpus"), new Path(s"$path/.reindex_tmp/corpus")))
-    fs.create(new Path(s"$path/.reindex_tmp/_SUCCESS"), true).close()
+    val stage = new Path(StoreSwap.stage(path))
+    assert(fs.rename(new Path(path), stage))
+    fs.create(new Path(stage, "_SUCCESS"), true).close()
     StreamingIvfIndex.reindex(spark, path, nClusters = 2) // entry recovery path
     assert(StreamingIvfIndex.servingCorpus(spark, path)
       .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSet === served)
-    assert(!fs.exists(new Path(s"$path/.reindex_tmp")))
-  }
-
-  test("a crash between the two swap renames recovers per component, then refits") {
-    import org.apache.hadoop.fs.Path
-    val path = java.nio.file.Files.createTempDirectory("ivf-rcrash2").toString + "/ix"
-    StreamingIvfIndex.bootstrap(modeDf(0, 0L until 40L, 0.05), path, nClusters = 2)
-    val servedVecs = StreamingIvfIndex.servingCorpus(spark, path)
-      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSet
-    // Simulate a crash AFTER the centroids rename but BEFORE the
-    // corpus rename: live centroids are the ONLY centroids copy (their
-    // tmp counterpart is gone), live corpus is deleted, the tmp holds
-    // the staged corpus + marker. An unconditional delete-and-rename
-    // recovery would destroy the centroids, fail the rename of the
-    // absent tmp counterpart, and wedge every subsequent reindex.
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$path/.reindex_tmp"))
-    assert(fs.rename(new Path(s"$path/corpus"), new Path(s"$path/.reindex_tmp/corpus")))
-    fs.create(new Path(s"$path/.reindex_tmp/_SUCCESS"), true).close()
-    StreamingIvfIndex.reindex(spark, path, nClusters = 2) // recover + refit
-    assert(fs.exists(new Path(s"$path/centroids")),
-      "recovery must KEEP the already-promoted centroids")
-    assert(StreamingIvfIndex.servingCorpus(spark, path)
-      .select("vec_id", "embedding").as[(Long, Seq[Float])].collect().toSet === servedVecs,
-      "no vector may be lost across the per-component recovery + refit")
-    assert(!fs.exists(new Path(s"$path/.reindex_tmp")))
-    // not wedged: the next reindex runs cleanly end to end
-    StreamingIvfIndex.reindex(spark, path, nClusters = 2)
-    assert(StreamingIvfIndex.servingCorpus(spark, path).count() === servedVecs.size.toLong)
+    assert(!fs.exists(stage))
   }
 
   test("recovery falls through to the requested re-cluster (skew is addressed)") {
@@ -283,13 +255,12 @@ class StreamingIvfIndexSpec extends SparkTestBase {
     assert(skewBefore > 1.5, s"setup must be skewed, got $skewBefore")
     // plant a completed-but-unswapped stage (mid-swap crash state)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$path/.reindex_tmp"))
-    assert(fs.rename(new Path(s"$path/corpus"), new Path(s"$path/.reindex_tmp/corpus")))
-    assert(fs.rename(new Path(s"$path/centroids"), new Path(s"$path/.reindex_tmp/centroids")))
-    fs.create(new Path(s"$path/.reindex_tmp/_SUCCESS"), true).close()
+    val stage = new Path(StoreSwap.stage(path))
+    assert(fs.rename(new Path(path), stage))
+    fs.create(new Path(stage, "_SUCCESS"), true).close()
     // ONE call must both finish the crashed swap AND perform the
-    // requested re-cluster (reindex directly: the skew probe reads the
-    // live corpus, which mid-crash is still staged under the temp)
+    // requested re-cluster (reindex directly, not through the skew
+    // probe, so the recovery is reindex's own)
     StreamingIvfIndex.reindex(spark, path, nClusters = 4)
     val skewAfter = StreamingIvfIndex.skewRatio(spark, path)
     assert(skewAfter < skewBefore,

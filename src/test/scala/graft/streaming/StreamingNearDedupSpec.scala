@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import graft.sources.StoreSwap
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -105,7 +106,7 @@ class StreamingNearDedupSpec extends SparkTestBase {
     spark.read.parquet(store)
       .groupBy(col("band"), col("key")).agg(max(col("ts")).as("ts"))
       .withColumn("batch_id", lit(StreamingNearDedup.PreHistoryBatchId))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$store-staged")
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(StoreSwap.stage(store))
     val p = new org.apache.hadoop.fs.Path(store)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     // the near-copy must STILL be suppressed — a missing store with a
@@ -117,7 +118,7 @@ class StreamingNearDedupSpec extends SparkTestBase {
     assert(kept === Set.empty[Long], "standing state lost across the crash window")
     // and the recovery consumed the stage (a stale snapshot must not
     // resurrect a store deleted on purpose later)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$store-staged")))
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(StoreSwap.stage(store))))
   }
 
   test("a non-missing-path read failure propagates instead of serving an empty store") {
